@@ -9,63 +9,93 @@ Golden semantics pinned by the reference tests at ``file.rs:621-696``.
 
 Spark-first design notes (100 TB posture):
 
-- The single-query path (`asof_range`) is filter + ``max_by`` aggregation.
-  The filters (asset equi + date range + ts bound) are plain column
-  predicates, so Catalyst pushes them into the Parquet scan: on a layout
-  produced by :mod:`findb_spark.layout` the scan prunes to the handful of
-  files/row-groups covering that asset's date range — the moral equivalent of
-  the reference's B+tree descent (file.rs:425-452) at cluster scale.
-- ``max_by(struct(ts, value), ts)`` gives a *partial-aggregatable* plan: the
-  per-(asset,date) "latest revision" combines map-side, so the shuffle moves
-  at most one row per (asset, date) per map partition, not every revision.
-  A window/``row_number`` formulation would instead shuffle every revision.
+- The single-query path (`asof_range`) is ONE ``spark.sql`` statement: the
+  as-of predicate plus a ``GROUP BY`` latest-revision aggregate, with the
+  bounds bound through named parameter markers (never interpolated into the
+  SQL text). One parse + one analysis per query instead of a chain of
+  eagerly analyzed Column-DSL steps. The predicate (asset equi + date range
+  + ts bound, and the ``date_month`` partition range when the layout has
+  one) is plain column comparisons against literals, so Catalyst prunes
+  directories and pushes the rest into the Parquet scan: on a layout
+  produced by :mod:`findb_spark.layout` the scan touches only the files /
+  row-groups covering that asset's date range — the moral equivalent of the
+  reference's B+tree descent (file.rs:425-452) at cluster scale.
+- ``max_by(struct(ts, value), struct(ts, value))`` (:data:`LATEST_REVISION_SQL`,
+  the one tie-break every as-of dedup shares) is *partial-aggregatable*:
+  the per-(asset, date) latest revision combines map-side, so the one hash
+  exchange moves at most one row per (asset, date) per map partition, not
+  every revision. A window/``row_number`` formulation would shuffle every
+  revision.
+- Ordering is a one-partition LOCAL sort (``coalesce(1)`` +
+  ``sortWithinPartitions``), not a global ``orderBy``: the answer holds at
+  most one row per date of the range, so a single sorted partition is
+  bounded, while a global sort adds a range-sampling job and a second
+  shuffle stage to every query. The coalesce sits AFTER the aggregate's
+  hash exchange on purpose: coalescing before it would also fold the scan
+  into a single task that opens every file footer, which at scale is the
+  wrong trade for one job fewer.
 - The batched path (`asof_batch`) joins a (small) query table against the
-  prices table. The query side is explicitly broadcast: N queries x full
-  scan-once of the pruned price range, no shuffle of the big side at all for
-  the join itself; the only exchange is the final per-(query_id, asset,
-  date) aggregation, which is again map-side combined.
+  prices table. The query side is explicitly broadcast: N queries x
+  scan-once of the pruned price range, no shuffle of the big side for the
+  join itself; the only exchange is the per-(query_id, asset, date)
+  aggregation, map-side combined, followed by the same one-partition
+  local sort.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import numbers
+
+from pyspark.sql import DataFrame, Window, functions as F
 
 #: canonical column order of a bitemporal prices table (FIXTURES.md §A1)
 PRICE_COLUMNS = ("asset_id", "date", "ts", "value")
 
+#: the latest-revision pick shared by every as-of dedup: per group the max-ts
+#: row; ties on ts (not possible in well-formed data — (asset_id, date, ts)
+#: is unique, FIXTURES.md §A1) break by max value for determinism
+LATEST_REVISION_SQL = "max_by(struct(ts, value), struct(ts, value))"
+
+#: the pushdown-able as-of predicate (file.rs:543-556) over named parameter
+#: markers; the month range prunes hive ``date_month`` directories (see
+#: findb_spark.layout.write_prices) before file stats are consulted
+_ASOF_PREDICATE = (
+    "asset_id = :asset_id AND `date` BETWEEN :start_date AND :end_date"
+    " AND ts <= :asof_ts"
+)
+_MONTH_PREDICATE = " AND date_month BETWEEN :start_date DIV 100 AND :end_date DIV 100"
+
 
 def _latest_revision(grouped_keys: list[str], df: DataFrame) -> DataFrame:
-    """Per group, pick (ts, value) of the max-ts row via map-side-combinable
-    ``max_by``. Ties on ts (not possible in well-formed data — (asset_id,
-    date, ts) is unique, FIXTURES.md §A1) break by max value for determinism.
-    """
-    return df.groupBy(*grouped_keys).agg(
-        F.max_by(F.struct(F.col("ts"), F.col("value")), F.struct(F.col("ts"), F.col("value"))).alias("_r")
-    ).select(*grouped_keys, F.col("_r.ts").alias("ts"), F.col("_r.value").alias("value"))
+    """Per group, (ts, value) of the latest revision (:data:`LATEST_REVISION_SQL`)."""
+    return df.groupBy(*grouped_keys).agg(F.expr(LATEST_REVISION_SQL).alias("_r")).select(
+        *grouped_keys, F.col("_r.ts").alias("ts"), F.col("_r.value").alias("value")
+    )
+
+
+def _asof_where(
+    prices: DataFrame, asset_id: int, start_date: int, end_date: int, asof_ts: int
+) -> tuple[str, dict[str, int]]:
+    """The as-of predicate for ``prices`` and its parameter bindings.
+
+    Bounds must be ints: parameter binding would otherwise cast silently
+    (``'1'`` -> 1, ``1.5`` -> 1, ``True`` -> 1)."""
+    args = {"asset_id": asset_id, "start_date": start_date, "end_date": end_date, "asof_ts": asof_ts}
+    for name, v in args.items():
+        if isinstance(v, bool) or not isinstance(v, numbers.Integral):
+            raise TypeError(f"{name} must be an int, got {type(v).__name__}: {v!r}")
+        args[name] = int(v)
+    pred = _ASOF_PREDICATE + (_MONTH_PREDICATE if "date_month" in prices.columns else "")
+    return pred, args
 
 
 def asof_filter(
-    prices: DataFrame,
-    asset_id: int | Column,
-    start_date: int | Column,
-    end_date: int | Column,
-    asof_ts: int | Column,
+    prices: DataFrame, asset_id: int, start_date: int, end_date: int, asof_ts: int
 ) -> DataFrame:
-    """The pushdown-able predicate of the as-of query (file.rs:543-556).
-
-    When the table carries a hive ``date_month`` partition column (see
-    findb_spark.layout.write_prices), the date range is also expressed as a
-    partition predicate so Catalyst prunes whole directories before file
-    stats are consulted — at 100 TB this is the B+tree-descent analog: the
-    scan touches only the months covering the range."""
-    cond = (
-        (F.col("asset_id") == asset_id)
-        & F.col("date").between(start_date, end_date)
-        & (F.col("ts") <= asof_ts)
-    )
-    if "date_month" in prices.columns and isinstance(start_date, int) and isinstance(end_date, int):
-        cond = cond & F.col("date_month").between(start_date // 100, end_date // 100)
-    return prices.where(cond)
+    """The rows of ``prices`` the as-of query may pick from: the same
+    predicate `asof_range` aggregates over (file.rs:543-556)."""
+    pred, args = _asof_where(prices, asset_id, start_date, end_date, asof_ts)
+    return prices.sparkSession.sql(f"SELECT * FROM {{prices}} WHERE {pred}", args=args, prices=prices)
 
 
 def asof_range(
@@ -80,10 +110,15 @@ def asof_range(
     Returns columns (asset_id, date, ts, value), descending date order,
     at most one row per date.
     """
-    filtered = asof_filter(prices, asset_id, start_date, end_date, asof_ts)
-    return (
-        _latest_revision(["asset_id", "date"], filtered)
-        .orderBy(F.desc("date"))
+    pred, args = _asof_where(prices, asset_id, start_date, end_date, asof_ts)
+    # COALESCE(1) hint + SORT BY = .coalesce(1).sortWithinPartitions(desc
+    # date), kept inside the statement: one analysis instead of three
+    return prices.sparkSession.sql(
+        "SELECT /*+ COALESCE(1) */ asset_id, `date`, _r.ts AS ts, _r.value AS value"
+        f" FROM (SELECT asset_id, `date`, {LATEST_REVISION_SQL} AS _r FROM {{prices}}"
+        f" WHERE {pred} GROUP BY asset_id, `date`) SORT BY `date` DESC",
+        args=args,
+        prices=prices,
     )
 
 
@@ -98,23 +133,24 @@ def asof_batch(prices: DataFrame, queries: DataFrame, prune_bounds: bool = True)
 
     ``queries`` schema: (query_id, asset_id, start_date, end_date, asof_ts).
     Result: (query_id, asset_id, date, ts, value), <=1 row per
-    (query_id, date).
+    (query_id, date), ordered by (query_id, date desc).
 
-    Scale: the query table is the bounded side (thousands of rows, not TB) —
-    broadcast it so the price table never shuffles for the join. Catalyst
-    additionally derives a pushable range on the big side from the join
-    predicate only when the bounds are literals, so callers with a *static*
-    query list should prefer `asof_range` per query or pre-filter; for the
-    general dynamic case the scan is bounded by the layout's partition
-    pruning on ``asset_id`` via DPP when the query side is small.
+    Plan: the query table is the bounded side (thousands of rows, not TB),
+    so it is broadcast and the price table never shuffles for the join;
+    the join output feeds a partial (map-side) latest-revision aggregate
+    over one hash exchange on (query_id, asset_id, date); the aggregated
+    answer — at most one row per (query, date) — is coalesced to one
+    partition AFTER that exchange and sorted locally. No global sort, so
+    no range-sampling job; and the scan keeps its full task parallelism,
+    which a coalesce placed before the aggregate would collapse.
 
-    ``prune_bounds``: the query table is bounded by contract (it is
-    broadcast), so one tiny driver-side aggregate over it yields *literal*
-    global bounds — min(start_date), max(end_date), max(asof_ts) — that
-    Catalyst can push into the price scan as static predicates. At 100 TB
-    this converts the full-table pass into a range scan of the covered
-    dates before the join even runs; the per-query bounds still apply in
-    the join condition.
+    ``prune_bounds``: one tiny driver-side aggregate over the (broadcast,
+    bounded) query table yields *literal* global bounds — min(start_date),
+    max(end_date), max(asof_ts) — that Catalyst pushes into the price scan
+    as static predicates, turning the full-table pass into a range scan of
+    the covered dates; the per-query bounds still apply in the join
+    condition. Callers whose bounds are already literals pass False to
+    skip that job.
     """
     if prune_bounds:
         lo, hi, ts_hi = queries.agg(
@@ -143,7 +179,8 @@ def asof_batch(prices: DataFrame, queries: DataFrame, prune_bounds: bool = True)
     )
     return (
         _latest_revision(["query_id", "asset_id", "date"], joined)
-        .orderBy("query_id", F.desc("date"))
+        .coalesce(1)
+        .sortWithinPartitions("query_id", F.desc("date"))
     )
 
 

@@ -196,13 +196,6 @@ def read_prices(spark: SparkSession, path: str) -> DataFrame:
     return df.select(*cols)
 
 
-def files_scanned(df: DataFrame) -> int:
-    """Number of files backing the relation (NOT filter-aware —
-    ``Dataset.inputFiles`` lists the whole FileIndex). Use `scan_metrics`
-    for pruning evidence."""
-    return len(df.inputFiles())
-
-
 def scan_metrics(df: DataFrame) -> list[dict[str, int]]:
     """Pruning observability — the analog of the reference's ``pages_read``
     counter (file.rs:477,504,534). Executes the plan and returns the runtime

@@ -19,7 +19,26 @@ import os
 
 from pyspark.sql import SparkSession, functions as F
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_cpus() -> int:
+    """Cores for ``local[N]`` and the default shuffle grain:
+    ``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def host_driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM``, else 8 GiB
+    capped at half of the host's ``MemTotal``."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        total_kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(8 * 1024, total_kib // 2 // 1024)}m"
+
+
+DEFAULT_SHUFFLE_PARTITIONS = host_cpus()
 
 
 def get_spark(
@@ -33,7 +52,7 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine's defaults.
 
     On a real cluster ``master`` comes from spark-submit; locally we default
-    to ``local[$SPARK_GRAFT_CPUS]``.
+    to ``local[N]`` with N from :func:`host_cpus`.
 
     ``initial_partitions`` sets AQE's ``coalescePartitions.
     initialPartitionNum`` — THE dial for data ≫ memory-per-core.  Shuffles
@@ -60,7 +79,6 @@ def get_spark(
     (pinned in tests/test_auto_grain.py), so the bench headline cannot
     regress.  An explicit ``initial_partitions`` wins over the rule.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if auto_grain_for is not None and initial_partitions is None:
         grain_dir, grain_table, grain_family = auto_grain_for
         initial_partitions = auto_initial_partitions(
@@ -97,7 +115,7 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.codegen.wholeStage", "true")
@@ -108,7 +126,7 @@ def get_spark(
             str(initial_partitions),
         )
     if master is None and "SPARK_MASTER" not in os.environ:
-        master = f"local[{cpus}]"
+        master = f"local[{host_cpus()}]"
     if master:
         builder = builder.master(master)
     for k, v in (extra_conf or {}).items():

@@ -110,3 +110,22 @@ def test_get_spark_auto_grain_one_liner(spark):
         assert s.conf.get(key) == "512"
     finally:
         spark.conf.unset(key)
+
+
+def test_host_defaults_without_env(monkeypatch):
+    """With the pins unset, cores come from the process's CPU affinity and
+    the driver gets at most half of the host's memory (never a fixed
+    32 cores / 8 g whatever the machine)."""
+    from findb_spark.session import host_cpus, host_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert host_cpus() == len(os.sched_getaffinity(0))
+    mem = host_driver_memory()
+    assert mem.endswith("m")
+    with open("/proc/meminfo") as f:
+        total_mib = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:")) // 1024
+    assert 0 < int(mem[:-1]) <= min(8 * 1024, total_mib // 2)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert (host_cpus(), host_driver_memory()) == (3, "2g")

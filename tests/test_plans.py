@@ -7,7 +7,8 @@ filter placement, or join strategy fails CI rather than silently turning
 into a 100x slowdown at cluster scale:
 
 - as-of queries: predicate pushdown to the parquet scan (asset equality +
-  date bounds in PushedFilters) and column pruning (ReadSchema);
+  date bounds in PushedFilters), column pruning (ReadSchema), one hash
+  exchange and a one-partition local sort (no global-sort range exchange);
 - star joins: dimension sides broadcast (no shuffle of the fact table for
   the join), no SortMergeJoin at fixture scale;
 - as-of dedup: partial (map-side) max_by aggregation, bounded exchanges.
@@ -18,17 +19,22 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from findb_spark.registry import all_specs
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(spark, name: str) -> str:
-    df = all_specs()[name].fn(spark, SF_DIR)
+def _formatted(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _plan(spark, name: str) -> str:
+    return _formatted(all_specs()[name].fn(spark, SF_DIR))
 
 
 def test_asof_range_pushdown_and_pruning(spark):
@@ -40,6 +46,70 @@ def test_asof_range_pushdown_and_pruning(spark):
     # column pruning: the scan reads only the 4 derivation columns
     read_schema = next(l for l in p.splitlines() if "ReadSchema" in l)
     assert read_schema.split("struct<", 1)[1].count(":") == 4, read_schema
+
+
+def test_asof_serving_plans_have_no_global_sort(spark):
+    """The serving answers are ordered by a one-partition local sort: a
+    global orderBy would add a range-sampling job and a second shuffle
+    stage to every query."""
+    for name in ("asof_range", "asof_point", "asof_batch"):
+        p = _plan(spark, name)
+        assert "Exchange rangepartitioning" not in p, name
+        assert "Coalesce" in p, name
+
+
+def test_asof_range_single_hash_exchange(spark):
+    """The latest-revision aggregate is the only shuffle of the range
+    query, and the one-partition coalesce sits after it (the scan keeps
+    its task parallelism)."""
+    import re
+
+    p = _plan(spark, "asof_range")
+    ex = re.findall(r"^\(\d+\) Exchange(.*)$", p, flags=re.M)
+    assert len(ex) == 1, ex
+    assert "hashpartitioning(asset_id" in p
+    nodes = re.findall(r"^\((\d+)\) (\w+)", p, flags=re.M)
+    order = {name: int(i) for i, name in nodes}
+    assert order["Exchange"] < order["Coalesce"], nodes
+
+
+@pytest.fixture(scope="module")
+def clustered(spark, sf_dir, tmp_path_factory):
+    from findb_spark.layout import read_prices, write_prices
+    from findb_spark.prices import prices_from_lineitem
+
+    path = str(tmp_path_factory.mktemp("plans") / "prices")
+    write_prices(prices_from_lineitem(spark, sf_dir), path, num_partitions=8, date_bucket="month")
+    return read_prices(spark, path)
+
+
+def test_asof_range_pushes_bounds_on_clustered_table(clustered):
+    from findb_spark.asof import asof_range
+
+    p = _formatted(asof_range(clustered, 7, 19950101, 19961231, 10**10))
+    pushed = next(l for l in p.splitlines() if "PushedFilters" in l)
+    assert "EqualTo(asset_id,7)" in pushed, pushed
+    assert "GreaterThanOrEqual(date,19950101)" in pushed, pushed
+    assert "LessThanOrEqual(date,19961231)" in pushed, pushed
+    part = next(l for l in p.splitlines() if "PartitionFilters" in l)
+    assert "date_month" in part, part
+
+
+def test_asof_range_collect_runs_at_most_two_jobs(spark, clustered):
+    """One shuffle-map job for the partial aggregate and one result job:
+    no range-sampling job for a global sort."""
+    from findb_spark.asof import asof_range
+
+    sc = spark.sparkContext
+    group = "asof-range-job-count"
+    sc.setJobGroup(group, "asof_range job count")
+    try:
+        rows = asof_range(clustered, 7, 19920101, 19981231, 10**10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs
 
 
 def test_star_join_broadcasts_dimensions(spark):
@@ -550,10 +620,7 @@ _MERGE_PIN_EXPECT = {
 }
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize(
+@pytest.mark.parametrize(
     "name", sorted(_MERGE_PIN_EXPECT), ids=lambda n: n
 )
 def test_never_broadcast_merge_pins_hold(spark, name):
