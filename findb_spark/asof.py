@@ -184,6 +184,45 @@ def asof_batch(prices: DataFrame, queries: DataFrame, prune_bounds: bool = True)
     )
 
 
+def _tagged_union(
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    left_time: str,
+    right_time: str,
+    value_cols: tuple[str, ...],
+) -> DataFrame:
+    """The as-of joins' one input relation: right rows (``_is_q`` 0,
+    ``_vs`` = the value struct) unioned with left probe rows (``_is_q``
+    1, ``_vs`` NULL), keyed by ``on`` with the time in ``_t``; left
+    payload columns travel as ``_l_<c>`` (NULL on right rows).
+
+    ALL requested right columns travel in ONE struct, so a single
+    last/first(ignorenulls) selects one whole right row.  Independent
+    per-column picks would stitch a "torn row" whenever a value column
+    contains NULLs (each column's last non-null can come from a
+    DIFFERENT revision, which would also let a stale value slip past the
+    tolerance check)."""
+    l_payload = [c for c in left.columns if c != on]
+    r_types = dict(right.dtypes)
+    vs_type = "struct<" + ",".join(f"{c}:{r_types[c]}" for c in value_cols) + ">"
+    tagged_r = right.select(
+        F.col(on),
+        F.col(right_time).alias("_t"),
+        F.lit(0).alias("_is_q"),
+        F.struct(*[F.col(c) for c in value_cols]).alias("_vs"),
+        *[F.lit(None).alias(f"_l_{c}") for c in l_payload],
+    )
+    tagged_l = left.select(
+        F.col(on),
+        F.col(left_time).alias("_t"),
+        F.lit(1).alias("_is_q"),
+        F.lit(None).cast(vs_type).alias("_vs"),
+        *[F.col(c).alias(f"_l_{c}") for c in l_payload],
+    )
+    return tagged_r.unionByName(tagged_l)
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -223,33 +262,10 @@ def asof_join(
     """
     if tolerance is not None and right_time not in value_cols:
         raise ValueError("tolerance requires right_time in value_cols")
-    l_cols = [c for c in left.columns]
-    # ALL requested right columns travel in ONE struct: a single
-    # last(ignorenulls) then selects one whole right row. Independent
-    # per-column lasts would stitch a "torn row" whenever a value column
-    # contains NULLs (each column's last non-null can come from a
-    # DIFFERENT revision — e.g. matched_ts from the newest row with
-    # matched_value from an older one, which would also let a stale value
-    # slip past the tolerance check).
-    r_types = dict(right.dtypes)
-    vs_type = "struct<" + ",".join(f"{c}:{r_types[c]}" for c in value_cols) + ">"
-    tagged_r = right.select(
-        F.col(on),
-        F.col(right_time).alias("_t"),
-        F.lit(0).alias("_is_q"),
-        F.struct(*[F.col(c) for c in value_cols]).alias("_vs"),
-        *[F.lit(None).alias(f"_l_{c}") for c in l_cols if c != on],
-    )
-    tagged_l = left.select(
-        F.col(on),
-        F.col(left_time).alias("_t"),
-        F.lit(1).alias("_is_q"),
-        F.lit(None).cast(vs_type).alias("_vs"),
-        *[F.col(c).alias(f"_l_{c}") for c in l_cols if c != on],
-    )
     if direction not in ("backward", "forward"):
         raise ValueError("direction must be 'backward' or 'forward'")
-    unioned = tagged_r.unionByName(tagged_l)
+    l_cols = [c for c in left.columns]
+    unioned = _tagged_union(left, right, on, left_time, right_time, value_cols)
     # data rows sort before probe rows at equal time => ties are inclusive
     # (right_time == left_time matches), matching `ts <= asof` semantics.
     # forward direction = the same running last-known-value scan over a
@@ -331,23 +347,7 @@ def asof_join_nearest(
     if right_time not in value_cols:
         raise ValueError("nearest requires right_time in value_cols")
     l_cols = [c for c in left.columns]
-    r_types = dict(right.dtypes)
-    vs_type = "struct<" + ",".join(f"{c}:{r_types[c]}" for c in value_cols) + ">"
-    tagged_r = right.select(
-        F.col(on),
-        F.col(right_time).alias("_t"),
-        F.lit(0).alias("_is_q"),
-        F.struct(*[F.col(c) for c in value_cols]).alias("_vs"),
-        *[F.lit(None).alias(f"_l_{c}") for c in l_cols if c != on],
-    )
-    tagged_l = left.select(
-        F.col(on),
-        F.col(left_time).alias("_t"),
-        F.lit(1).alias("_is_q"),
-        F.lit(None).cast(vs_type).alias("_vs"),
-        *[F.col(c).alias(f"_l_{c}") for c in l_cols if c != on],
-    )
-    unioned = tagged_r.unionByName(tagged_l)
+    unioned = _tagged_union(left, right, on, left_time, right_time, value_cols)
     # Duplicate right rows sharing (on, right_time) tie-break to the MAX
     # value-struct in BOTH directions (matching asof_join's rule): the
     # backward frame orders _vs ASC and takes last(); the forward frame

@@ -6,8 +6,9 @@ Numeric determinism: dot products and norms are fixed-point integer sums
 (per-element ``floor(x*y*1e12 + 0.5)`` — identical IEEE-754 ops on any
 engine, then exact integer accumulation), so cosine values are
 bit-identical between Spark and the DuckDB oracle regardless of
-partitioning. All array math is JVM-side (``zip_with``/``aggregate``
-inside codegen) — no Python boundary.
+partitioning. Each fixed-point expression is parsed from one SQL string
+and unrolled so it stays inside codegen; the PQ corpus encode and the
+driver-side ADC tables run the same IEEE ops in numpy.
 
 Scale:
 - brute-force top-k against a bounded query set is a broadcast
@@ -35,38 +36,8 @@ PROJ_SCALE = 10**9
 N_PLANES = 6
 
 
-def fxp_dot(a: Column, b: Column, dim: int = DIM) -> Column:
-    """Deterministic fixed-point dot product of two float arrays (scaled by
-    FXP_SCALE, exact integer sum).
-
-    Unrolled over the fixed dimension instead of zip_with/aggregate:
-    higher-order array functions are evaluated *interpreted* (off the
-    whole-stage-codegen path) and cost ~50x on all-pairs joins; a 64-term
-    element_at expression stays inside codegen. Integer addition is
-    associative, so the unrolled sum is bit-identical to the fold."""
-    terms = [
-        F.floor(
-            F.element_at(a, i).cast("double")
-            * F.element_at(b, i).cast("double")
-            * FXP_SCALE
-            + F.lit(0.5)
-        )
-        for i in range(1, dim + 1)
-    ]
-    # balanced addition tree (depth log2(dim), not dim): integer addition
-    # is associative so the value is bit-identical to the left-linear fold,
-    # but Catalyst analysis of the expression is ~2x faster at depth 7 vs
-    # depth 64 (driver-side cost that showed up as bench 'build' time)
-    while len(terms) > 1:
-        terms = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0].cast("bigint")
-
-
 def fxp_dot_sql(a: str, b: str, dim: int = DIM) -> str:
-    """DuckDB twin of `fxp_dot`."""
+    """DuckDB twin of :func:`fxp_dot_expr`."""
     return (
         f"CAST(list_sum(list_transform(range(1, {dim + 1}), i -> "
         f"CAST(FLOOR(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) * {FXP_SCALE}.0 + 0.5)"
@@ -74,48 +45,42 @@ def fxp_dot_sql(a: str, b: str, dim: int = DIM) -> str:
     )
 
 
-def fxp_dot_expr(a: str, b: str, dim: int = DIM) -> Column:
-    """:func:`fxp_dot` over plain column NAMES, built as one
-    server-side-parsed SQL string: the parser produces the identical
-    Floor/Multiply/Add expression tree (integer adds are associative, so
-    the inline sum is bit-equal to the balanced tree), but construction
-    is ONE py4j call instead of ~400 — the Column-DSL form costs ~0.7s
-    of driver round-trip chatter per use, which dominated plan-build
-    time for every vector query."""
+def _fxp_sum_spark_sql(a: str, b: str, dim: int) -> str:
+    """Spark SQL text of the exact fixed-point dot of columns ``a`` and
+    ``b``: per element ``floor(x*y*FXP_SCALE + 0.5)`` (BIGINT), summed
+    as integers."""
     terms = [
         f"FLOOR((CAST(element_at({a}, {i}) AS DOUBLE) * "
         f"CAST(element_at({b}, {i}) AS DOUBLE)) * {FXP_SCALE} + 0.5D)"
         for i in range(1, dim + 1)
     ]
-    return F.expr("CAST((" + " + ".join(terms) + ") AS BIGINT)")
+    return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
+
+
+def fxp_dot_expr(a: str, b: str, dim: int = DIM) -> Column:
+    """Deterministic fixed-point dot product (scaled by FXP_SCALE, exact
+    integer sum) of two float-array columns given by NAME, over their
+    first ``dim`` elements.
+
+    Unrolled over the fixed dimension so it stays inside whole-stage
+    codegen (higher-order array functions run interpreted), and parsed
+    server-side from one SQL string: one py4j call instead of ~400."""
+    return F.expr(_fxp_sum_spark_sql(a, b, dim))
 
 
 def norm_expr(v: str, dim: int = DIM) -> Column:
-    """:func:`norm` over a plain column NAME (see :func:`fxp_dot_expr`
-    for why the string form exists).  Same ops: sqrt of the exact
-    fixed-point self-dot over FXP_SCALE."""
-    terms = [
-        f"FLOOR((CAST(element_at({v}, {i}) AS DOUBLE) * "
-        f"CAST(element_at({v}, {i}) AS DOUBLE)) * {FXP_SCALE} + 0.5D)"
-        for i in range(1, dim + 1)
-    ]
+    """Fixed-point L2 norm of column ``v``: sqrt of the exact self-dot
+    over FXP_SCALE — the same float ops as the norm terms inside
+    :func:`cosine_expr`, so precomputing it per row (not per pair) is
+    bit-identical."""
     return F.expr(
-        "SQRT(CAST(CAST(("
-        + " + ".join(terms)
-        + f") AS BIGINT) AS DOUBLE) / {FXP_SCALE})"
+        f"SQRT(CAST({_fxp_sum_spark_sql(v, v, dim)} AS DOUBLE) / {FXP_SCALE})"
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    dot = fxp_dot(a, b).cast("double") / FXP_SCALE
-    na = fxp_dot(a, a).cast("double") / FXP_SCALE
-    nb = fxp_dot(b, b).cast("double") / FXP_SCALE
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
 def cosine_expr(a: str, b: str, dim: int = DIM) -> Column:
-    """:func:`cosine` over plain column NAMES (see :func:`fxp_dot_expr`):
-    the identical dot/(sqrt*sqrt) float-op tree, one py4j call."""
+    """Fixed-point cosine of two float-array columns given by NAME: the
+    dot over the product of the norms, bit-identical cross-engine."""
     return (fxp_dot_expr(a, b, dim).cast("double") / FXP_SCALE) / (
         F.sqrt(fxp_dot_expr(a, a, dim).cast("double") / FXP_SCALE)
         * F.sqrt(fxp_dot_expr(b, b, dim).cast("double") / FXP_SCALE)
@@ -130,11 +95,18 @@ def cosine_sql(a: str, b: str, dim: int = DIM) -> str:
     )
 
 
-def norm(v: Column) -> Column:
-    """Fixed-point L2 norm — same float ops as the norm terms inside
-    :func:`cosine`, so precomputing it per row (not per pair) is
-    bit-identical and saves 128 of the 192 floor-terms per pair."""
-    return F.sqrt(fxp_dot(v, v).cast("double") / FXP_SCALE)
+def _cos_rank(j: DataFrame, k: int) -> DataFrame:
+    """Per query, the ``k`` corpus rows of highest cosine (ties to the
+    smaller vec_id) from (query_id, vec_id, embedding, _nrm, qv, _qnrm)
+    pairs; only the cross-pair dot product is evaluated per pair."""
+    sim = (fxp_dot_expr("embedding", "qv").cast("double") / FXP_SCALE) / (
+        F.col("_nrm") * F.col("_qnrm")
+    )
+    scored = j.select("query_id", "vec_id", sim.alias("cos_sim"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
+    return scored.select(
+        "query_id", "vec_id", "cos_sim", F.row_number().over(w).alias("rank")
+    ).where(F.col("rank") <= k)
 
 
 def cosine_topk(
@@ -144,25 +116,15 @@ def cosine_topk(
     per-query ranking window). ``query``: (query_id, qv array<float>).
 
     Norms are computed once per corpus row / query row before the join;
-    only the cross-pair dot product is evaluated per pair.
-
-    (Scan-parallelism widening of the corpus side was measured and
-    REJECTED round 13: at bench scale it bought ~0.2 s of wall but cost
-    ~0.6 CPU-s + GC churn in per-task fixed overhead — see
-    OPTIMIZATION_r13.md "widening experiment".)"""
+    only the cross-pair dot product is evaluated per pair.  The corpus
+    scan keeps its natural split: widening it cost more per-task CPU than
+    it saved in wall time at bench scale (OPTIMIZATION_r13.md)."""
     corpus = emb.withColumn("_nrm", norm_expr("embedding"))
     q = query.withColumn("_qnrm", norm_expr("qv"))
     j = corpus.crossJoin(F.broadcast(q))
     if exclude_self:
         j = j.where(F.col("vec_id") != F.col("query_id"))
-    sim = (fxp_dot_expr("embedding", "qv").cast("double") / FXP_SCALE) / (
-        F.col("_nrm") * F.col("_qnrm")
-    )
-    scored = j.select("query_id", "vec_id", sim.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return scored.select(
-        "query_id", "vec_id", "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return _cos_rank(j, k)
 
 
 def near_dup_pairs(
@@ -263,14 +225,10 @@ def lsh_buckets(emb: DataFrame, planes: list[list[int]] | None = None) -> DataFr
     """Random-hyperplane LSH bucket id per vector: bit j = sign of the
     fixed-point projection onto plane j.
 
-    KERNEL NOTE (measured round 6): unlike :func:`fxp_dot_expr`, the
-    unrolled-inline-SQL form LOSES here — 6 planes x 64 terms = 384
-    inline terms blow janino's method-size limit, so codegen fails
-    (one-time compile attempt ~1.7s) and execution falls back to
-    interpreted anyway: 0.5-0.7s warm vs 0.35s for this
-    ``aggregate(zip_with(...))`` form, whose per-element work (one
-    multiply by a +-1 literal) is too cheap for lambda-dispatch
-    overhead to dominate.  The higher-order form stays."""
+    Unlike :func:`fxp_dot_expr` this stays an ``aggregate(zip_with(...))``
+    form: the unrolled inline form (6 planes x 64 terms) exceeds janino's
+    method-size limit, so codegen fails and execution falls back to
+    interpreted anyway, slower than this fold of cheap +-1 multiplies."""
     planes = planes or plane_matrix()
     bucket = None
     for j, m in enumerate(planes):
@@ -473,14 +431,7 @@ def ivf_topk(
         F.broadcast(probes),
         (F.col("cluster") == F.col("qcluster")) & (F.col("vec_id") != F.col("query_id")),
     )
-    sim = (fxp_dot_expr("embedding", "qv").cast("double") / FXP_SCALE) / (
-        F.col("_nrm") * F.col("_qnrm")
-    )
-    scored = j.select("query_id", "vec_id", sim.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return scored.select(
-        "query_id", "vec_id", "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return _cos_rank(j, k)
 
 
 def semantic_dedup_pairs(
@@ -508,27 +459,15 @@ def semantic_dedup_pairs(
     # both sides of the within-cluster self-join read `assigned`; without a
     # persist the whole O(n*K) codebook-assignment subtree runs twice.
     #
-    # The explicit repartition on the cluster key (round 13, guide §2.5):
-    # the self-join FANS OUT — n input rows become ~n^2/K candidate pairs,
-    # each paying a 64-term fixed-point dot product — so the stage's cost
-    # is CPU per candidate, invisible to AQE's byte-based coalescing,
-    # which saw ~1 MB of cached input and collapsed the whole scoring
-    # stage to ONE task (measured 896 ms single-task CPU, 31 cores idle).
-    # An explicit partition count pins the exchange against coalescing
-    # (user-specified numPartitions is never coalesced); the count is the
-    # session's shuffle grain — the deployment-scaling dial, nothing
-    # local.  Skew MEASURED at a factor-16 octave (SCALE_SEMSKEW_r14.json):
-    # at the family's operating point (K grown with n) the scoring
-    # stage's straggle is max/p50 = 2.5 (cluster-size variance, bounded);
-    # a deliberately injected identical-content mega-cluster (4.6k rows,
-    # the K-grows-with-n violation) is ONE join key that neither this
-    # repartition nor AQE skew-join can split — straggle 5.8, stage wall
-    # pinned to the hot task.  The fallback for that regime is recursive
-    # re-clustering of oversized clusters (salting a self-join still
-    # computes every hot pair), documented in the artifact.
-    # 'auto' guard (round-14 advisor): deployments with AQE auto mode set
-    # spark.sql.shuffle.partitions to a non-integer literal; fall back to
-    # defaultParallelism rather than raising at plan-build time
+    # The explicit repartition on the cluster key: the self-join FANS OUT
+    # (n rows -> ~n^2/K candidate pairs, each a 64-term fixed-point dot),
+    # a CPU cost invisible to AQE's byte-based coalescing, which would
+    # collapse the scoring stage to one task.  A user-specified partition
+    # count is never coalesced; it is the session's shuffle grain.  One
+    # identical-content mega-cluster is a single join key no repartition
+    # can split (measured in SCALE_SEMSKEW_r14.json).  With AQE auto mode
+    # spark.sql.shuffle.partitions is not an integer: fall back to
+    # defaultParallelism rather than raising at plan-build time.
     try:
         n_shuf = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:
@@ -595,14 +534,7 @@ def ann_lsh_topk(
         F.broadcast(qb),
         (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
     )
-    sim = (fxp_dot_expr("embedding", "qv").cast("double") / FXP_SCALE) / (
-        F.col("_nrm") * F.col("_qnrm")
-    )
-    scored = j.select("query_id", "vec_id", sim.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return scored.select(
-        "query_id", "vec_id", "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return _cos_rank(j, k)
 
 
 # ---------------------------------------------------------------------------
@@ -632,47 +564,15 @@ PQ_K = 64  # codewords per subspace (production PQ uses 256; 64 keeps the
 PQ_TRAIN_CAP = 1 << 14
 
 
-def unit_vector(v: Column) -> Column:
-    """L2-normalize a float array to exact doubles: each element divided
-    by the fixed-point norm (one IEEE divide per element — bit-identical
-    cross-engine).  PQ quantizes NORMALIZED vectors so that squared L2
-    distance is rank-equivalent to cosine (||a-b||² = 2 - 2·cos on unit
-    vectors) — the metric every other search op here uses; quantizing raw
-    vectors would make ADC rank by magnitude, not direction.
-
-    NOTE: the norm subtree (a 64-term fixed-point dot) is embedded in the
-    transform lambda and re-evaluated per ELEMENT; prefer the two-phase
-    projection in :func:`_normalized` (norm into its own column first) on
-    any hot path — 64x less work per row and a far smaller plan."""
-    n = norm(v)
-    return F.transform(v, lambda x: x.cast("double") / n)
-
-
-def _normalized(emb: DataFrame) -> DataFrame:
-    """(vec_id, nv): the corpus unit-normalized (exact doubles) — norm
-    materialized into its own column first so each element's divide
-    references an attribute, not a re-evaluated 64-term dot subtree."""
-    return emb.select(
-        "vec_id", norm_expr("embedding").alias("_n"), "embedding"
-    ).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double") / F.col("_n")).alias(
-            "nv"
-        ),
-    )
-
-
 def fxp_l2_sub(a: Column, sw: Column, sub: int) -> Column:
     """Deterministic fixed-point squared-L2 distance between subvector
     ``sub`` of the full array ``a`` and the PQ_SUBDIM-dim codeword ``sw``:
     per element ``floor((ai-bi)^2 * FXP_SCALE + 0.5)`` (exact IEEE double
-    ops on both engines), exact integer sum.  Unrolled like
-    :func:`fxp_dot` to stay inside whole-stage codegen.
+    ops on both engines), exact integer sum.
 
     This Column form is the executable SPECIFICATION of the PQ distance
-    arithmetic: the literal-codebook SQL kernels (:func:`_enc_code_sql`,
-    :func:`_lut_sql`) and the Arrow kernel (:func:`pq_encode_arrow`)
-    must produce bit-equal values — tests/test_llm_ops.py pins all three
+    arithmetic: the numpy kernels (:func:`pq_encode`, :func:`_luts_driver`)
+    must produce bit-equal values — tests/test_llm_ops.py pins both
     against this formulation."""
     base = sub * PQ_SUBDIM
     terms = []
@@ -690,6 +590,71 @@ def fxp_l2_sub(a: Column, sw: Column, sub: int) -> Column:
     return terms[0].cast("bigint")
 
 
+def _unit_rows(v):
+    """Unit-normalize each row of a float64 matrix with the fixed-point
+    norm: ``sqrt(sum(floor(x*x*FXP_SCALE + 0.5)) / FXP_SCALE)`` with the
+    floor terms summed in int64 (exact, order-free), then one IEEE divide
+    per element — the op sequence the DuckDB oracle runs.  PQ quantizes
+    NORMALIZED vectors so that squared L2 ranks like cosine
+    (||a-b||² = 2 - 2·cos on unit vectors)."""
+    import numpy as np
+
+    sq = np.floor(v * v * float(FXP_SCALE) + 0.5).astype(np.int64).sum(axis=1)
+    return v / np.sqrt(sq.astype(np.float64) / float(FXP_SCALE))[:, None]
+
+
+def _fxp_l2(d, axis: int):
+    """numpy twin of :func:`fxp_l2_sub` over difference tensor ``d``:
+    the int64 sum along ``axis`` of ``floor(d*d*FXP_SCALE + 0.5)``."""
+    import numpy as np
+
+    return np.floor(d * d * float(FXP_SCALE) + 0.5).astype(np.int64).sum(axis=axis)
+
+
+def _encode_rows(v, cb):
+    """PQ codes (n, PQ_M) in 1..PQ_K of unit rows ``v`` against codebook
+    ``cb`` (PQ_M, PQ_K, PQ_SUBDIM): per subspace the fixed-point-nearest
+    codeword, ties to the smallest code (min of the composite
+    ``dist*128 + code``; codes < 128 keep the order).  Rows go in blocks
+    of 256 so every (rows, K, SUBDIM) intermediate stays cache-resident;
+    block boundaries do not change any per-row sum."""
+    import numpy as np
+
+    n = len(v)
+    codes = np.empty((n, PQ_M), dtype=np.int32)
+    kcode = np.arange(cb.shape[1], dtype=np.int64) + 1
+    for m in range(PQ_M):
+        seg = v[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
+        for s in range(0, n, 256):
+            comp = _fxp_l2(seg[s : s + 256, None, :] - cb[m][None], 2) * 128 + kcode
+            codes[s : s + 256, m] = comp.min(axis=1) % 128
+    return codes
+
+
+def _cb_schema():
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [T.StructField("code", T.IntegerType(), False)]
+        + [
+            T.StructField(f"sw{m}", T.ArrayType(T.DoubleType()), False)
+            for m in range(PQ_M)
+        ]
+    )
+
+
+def _cb_out(cb) -> list[dict]:
+    """Codebook tensor (PQ_M, k, PQ_SUBDIM) -> wide rows with dense codes
+    1..k and per-subspace codewords ``sw0..sw{PQ_M-1}``."""
+    return [
+        {
+            "code": c + 1,
+            **{f"sw{m}": [float(x) for x in cb[m, c]] for m in range(PQ_M)},
+        }
+        for c in range(cb.shape[1])
+    ]
+
+
 def pq_codebook(emb: DataFrame, k: int = PQ_K) -> DataFrame:
     """Deterministic PQ init codebook in WIDE form: the ``k`` normalized
     corpus vectors minimal under hash order (same RNG-free sampling
@@ -699,14 +664,9 @@ def pq_codebook(emb: DataFrame, k: int = PQ_K) -> DataFrame:
     stays tiny at any scale.
 
     The distributed half is ONE TakeOrderedAndProject job (the k winners
-    under the cheap hash key); normalization and re-indexing of those k
-    rows run driver-side in numpy with the identical fixed-point
-    arithmetic (``sqrt(sum(floor(x*x*1e12+0.5))/1e12)`` then one IEEE
-    divide per element — bit-equal to the Column form, which a
-    window+transform plan previously spent 4 jobs / 7 stages on)."""
+    under the cheap hash key); normalization of those k rows runs
+    driver-side (:func:`_unit_rows`)."""
     import numpy as np
-
-    from pyspark.sql import types as T
 
     hk = hash48(F.col("vec_id").cast("string"))
     rows = (
@@ -716,43 +676,12 @@ def pq_codebook(emb: DataFrame, k: int = PQ_K) -> DataFrame:
         .collect()
     )
     rows.sort(key=lambda r: (r["_hk"], r["vec_id"]))
-    out = []
-    for code0, r in enumerate(rows):
-        v = np.array(list(r["embedding"]), dtype=np.float64)
-        n = float(
-            np.sqrt(
-                float(
-                    np.floor(v * v * float(FXP_SCALE) + 0.5)
-                    .astype(np.int64)
-                    .sum()
-                )
-                / float(FXP_SCALE)
-            )
-        )
-        cwv = v / n
-        out.append(
-            {
-                "code": code0 + 1,
-                **{
-                    f"sw{m}": [
-                        float(x)
-                        for x in cwv[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-                    ]
-                    for m in range(PQ_M)
-                },
-            }
-        )
-    schema = T.StructType(
-        [T.StructField("code", T.IntegerType(), False)]
-        + [
-            T.StructField(f"sw{m}", T.ArrayType(T.DoubleType()), False)
-            for m in range(PQ_M)
-        ]
-    )
-    # LocalRelation, not a Python-RDD plan (round 13): every evaluation
-    # of a createDataFrame(list) relation re-runs pickled slices through
-    # Python workers — see session.local_relation_df
-    return local_relation_df(emb.sparkSession, out, schema)
+    if not rows:
+        return local_relation_df(emb.sparkSession, [], _cb_schema())
+    cwv = _unit_rows(np.array([list(r["embedding"]) for r in rows], dtype=np.float64))
+    cb = cwv.reshape(len(rows), PQ_M, PQ_SUBDIM).transpose(1, 0, 2)
+    # LocalRelation, not a Python-RDD plan: see session.local_relation_df
+    return local_relation_df(emb.sparkSession, _cb_out(cb), _cb_schema())
 
 
 def _cb_lists(cbw: DataFrame | list) -> list[list[list[float]]]:
@@ -764,221 +693,66 @@ def _cb_lists(cbw: DataFrame | list) -> list[list[list[float]]]:
     return [[list(r[f"sw{m}"]) for r in rows] for m in range(PQ_M)]
 
 
-def _cb_onerow(spark, cw: list[list[list[float]]]) -> DataFrame:
-    """The whole codebook as ONE broadcastable row holding a
-    ``_cb[m][code][i]`` nested array (~PQ_M*PQ_K*PQ_SUBDIM doubles =
-    32 KB).  Joining this single row in (BroadcastNestedLoopJoin of a
-    1-row build side — no shuffle of the probe side) lets the encode /
-    ADC-table expressions reference the codewords as a plain column.
-    Doubles travel as binary values (py4j -> java.lang.Double), so
-    codewords stay bit-identical to the collected training output.
-    (Embedding them as SQL literal text instead costs ~4600 expression
-    nodes per subspace that the analyzer re-walks on every Dataset
-    construction — measured ~5s of pure driver latency per query.)"""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(
-                "_cb",
-                T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))),
-                False,
-            )
-        ]
-    )
-    return local_relation_df(spark, [(cw,)], schema)
-
-
-def _fxp_l2_terms_sql(m: int, col: str) -> str:
-    """The fixed-point squared-L2 sum of :func:`fxp_l2_sub` as inline SQL
-    with compile-time element indices — no inner ``aggregate(sequence)``
-    fold (its per-element array allocation + fold machinery is ~2-3x the
-    arithmetic itself when interpreted).  Integer addition is
-    associative, so the inline left-to-right sum is bit-equal to both the
-    fold and the Column form's balanced tree.  ``cw`` is the lambda var
-    bound to one codeword by the enclosing ``transform``."""
-    base = m * PQ_SUBDIM
-    terms = []
-    for i in range(1, PQ_SUBDIM + 1):
-        d = f"(element_at({col}, {base + i}) - element_at(cw, {i}))"
-        terms.append(f"FLOOR(({d} * {d}) * {FXP_SCALE} + 0.5D)")
-    return "(" + " + ".join(terms) + ")"
-
-
-def _enc_code_sql(m: int, col: str = "nv") -> str:
-    """SQL for subspace ``m``'s code against the joined ``_cb`` codebook
-    column: min over the codeword array of the composite
-    ``fxp_dist * 128 + code`` (identical arithmetic and tie-break —
-    smallest code on equal distance — as the fixed-point crossJoin+min
-    formulation this replaced; FLOOR(double) is BIGINT, the inline
-    integer adds are associative, so values are bit-equal)."""
-    comp = (
-        f"array_min(transform(element_at(_cb, {m + 1}), "
-        f"(cw, c0) -> {_fxp_l2_terms_sql(m, col)} * 128 + c0 + 1))"
-    )
-    return f"CAST({comp} % 128 AS INT)"
-
-
-def _lut_sql(m: int, col: str = "qv") -> str:
-    """SQL for a query's subspace-``m`` ADC table against the joined
-    ``_cb`` codebook column: fixed-point distance to each of the k
-    codewords, array-ordered by code 1..k (the order the scoring
-    ``element_at(l{m}, c{m})`` lookups assume)."""
-    return (
-        f"transform(element_at(_cb, {m + 1}), "
-        f"cw -> {_fxp_l2_terms_sql(m, col)})"
-    )
-
-
 def _luts_driver(
     q_rows: list, cw: list[list[list[float]]]
 ) -> list[tuple]:
-    """Driver-side twin of the :func:`_lut_sql` projection: per RAW query
-    row (vec_id, embedding), the PQ_M ADC tables — each an array of the
-    fixed-point distances to the k codewords, ordered by code 1..k.
-
-    Bit-equality contract (same as the pinned Arrow encode kernel, which
-    runs this exact op sequence): the query vector is unit-normalized
-    with the exact int64 self-dot (``floor(x*x*FXP_SCALE + 0.5)`` summed
-    in int64 — order-free), one IEEE sqrt, one IEEE divide per element —
-    identical to what ``norm_expr``/``_normalized`` computes JVM-side
-    within the 2^53 bound documented at :func:`pq_train`; each table
-    entry is ``sum_i floor((q_i - cw_i)^2 * FXP_SCALE + 0.5)`` with the
-    floor terms accumulated in int64 (associative, so numpy's sum order
-    is bit-equal to the JVM's left-to-right inline sum).  np.floor /
-    multiply / subtract are the identical IEEE-754 double ops the JVM
-    executes, and the resulting entries are pure int64 — nothing float
-    re-crosses py4j, so the literal luts relation is bit-identical to
-    the Column-form ``crossJoin(_cb) + _lut_sql`` projection it
-    replaces (pinned in tests/test_llm_ops.py)."""
+    """The ADC tables, computed driver-side: per RAW query row
+    (vec_id, embedding), unit-normalized by :func:`_unit_rows`, the PQ_M
+    tables — each the fixed-point distances (:func:`_fxp_l2`) to the k
+    codewords, ordered by code 1..k (the order the scoring
+    ``element_at(l{m}, c{m})`` lookups assume).  Inputs are bounded (a
+    handful of queries x PQ_M x PQ_K codewords) and entries are pure
+    int64, so the literal luts relation carries exact values."""
     import numpy as np
 
     cb = np.array(cw, dtype=np.float64)  # (PQ_M, PQ_K, PQ_SUBDIM)
+    q_rows = sorted(q_rows, key=lambda r: r["vec_id"])
+    if not q_rows:
+        return []
+    v = _unit_rows(
+        np.array([list(r["embedding"]) for r in q_rows], dtype=np.float64)
+    )
     out = []
-    for r in sorted(q_rows, key=lambda r: r["vec_id"]):
-        v = np.asarray(r["embedding"], dtype=np.float64)
-        sq = (
-            np.floor(v * v * float(FXP_SCALE) + 0.5)
-            .astype(np.int64)
-            .sum()
-        )
-        v = v / np.sqrt(float(sq) / float(FXP_SCALE))
+    for r, qv in zip(q_rows, v):
         luts = []
         for m in range(PQ_M):
-            seg = v[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-            d = seg[None, :] - cb[m]  # (K, SUBDIM)
-            terms = np.floor(d * d * float(FXP_SCALE) + 0.5).astype(np.int64)
-            luts.append([int(x) for x in terms.sum(axis=1)])
+            seg = qv[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
+            luts.append([int(x) for x in _fxp_l2(seg[None, :] - cb[m], 1)])
         out.append((int(r["vec_id"]), *luts))
     return out
 
 
-def pq_encode(nv: DataFrame, cbw: DataFrame | list) -> DataFrame:
-    """Quantize every normalized vector: per subspace, the code of the
-    L2-nearest codeword (ties to the smallest code).  Returns
-    (vec_id, c0..c{PQ_M-1}).
-
-    The codebook (bounded at PQ_K rows by construction) rides along as a
-    broadcast ONE-ROW nested array (:func:`_cb_onerow`), so the corpus
-    pass is one scan + a 1-row broadcast join + a projection — zero
-    shuffles of the corpus, zero row fan-out.  The previous formulation
-    (crossJoin against the 64-row broadcast codebook + 8-way min
-    aggregate) shuffled a 64x fan-out and cost ~8 AQE jobs of pure
-    scheduling overhead per encode; this form is the plan you want at
-    100 TB: encode streams at scan speed and writes one row per vector.
-    Distances fold in one fixed-point composite ``dist*128 + code``
-    (codes 1..64 < 128 preserve lexicographic order), exactly as before
-    — values are bit-identical.  For extreme per-row throughput the same
-    narrow shape can swap this HOF kernel for the vectorized Arrow
-    kernel (:func:`pq_encode_arrow`), pinned bit-equal by test."""
-    cw = _cb_lists(cbw)
-    cbdf = _cb_onerow(nv.sparkSession, cw)
-    return nv.crossJoin(F.broadcast(cbdf)).select(
-        "vec_id",
-        *[F.expr(_enc_code_sql(m)).alias(f"c{m}") for m in range(PQ_M)],
+def _luts(spark, q_rows: list, cw: list[list[list[float]]]) -> DataFrame:
+    """:func:`_luts_driver` as a LocalRelation (query_id, l0..l{PQ_M-1})."""
+    return local_relation_df(
+        spark,
+        _luts_driver(q_rows, cw),
+        "query_id bigint, " + ", ".join(f"l{m} array<bigint>" for m in range(PQ_M)),
     )
 
 
-def pq_encode_arrow(
-    nv: DataFrame, cbw: DataFrame | list, normalize: bool = False
-) -> DataFrame:
-    """Vectorized twin of :func:`pq_encode`: same narrow one-scan shape,
-    kernel swapped for numpy over Arrow batches (``mapInPandas``), the
-    SAME fixed-point composite (``floor(d*d*1e12 + 0.5)`` summed in
-    int64, ``*128 + code`` min) — np.floor/multiply are the identical
-    IEEE-754 double ops the JVM executes, so codes are bit-equal (pinned
-    by tests/test_llm_ops.py).  Distances are computed per subspace
-    ((n, K, SUBDIM) slices) rather than as one (n, M, K, SUBDIM) tensor:
-    the elementwise fixed-point floor rules out a BLAS matmul, so memory
-    locality is what decides throughput, and the 4-D form thrashed cache
-    badly enough to lose to the JVM kernel by 10x at 128k vectors.
+def pq_encode(emb: DataFrame, cbw: DataFrame | list) -> DataFrame:
+    """Quantize every RAW corpus vector (vec_id, embedding): unit-normalize
+    (:func:`_unit_rows`), then per subspace the code of the L2-nearest
+    codeword (:func:`_encode_rows`).  Returns (vec_id, c0..c{PQ_M-1}).
 
-    NOTE ON KERNEL CHOICE (re-measured round 6, local[32], forced
-    evaluation): this Arrow kernel beats the inline-SQL kernel at the
-    benched 2k-vector scale (2.4s vs 4.9s on identical pre-normalized
-    input; the SQL kernel's transform() lambdas are interpreted per
-    row), while the SQL kernel wins at 128k vectors where memory
-    bandwidth amortizes its constants (playbook numbers 11s vs 17s) —
-    so "arrow" is the default and "sql" the documented large-corpus
-    dial.
-
-    ``normalize=True`` takes RAW ``embedding`` input and unit-normalizes
-    inside the kernel with the identical fxp arithmetic as the Column
-    form (``sqrt(sum(floor(x*x*1e12+0.5))/1e12)`` then one IEEE divide
-    per element — the same numpy sequence :func:`pq_codebook` runs
-    driver-side, so codes stay bit-equal; pinned by test).  This skips
-    the JVM ``transform()`` normalization lambda entirely — interpreted
-    per element, it costs more than the whole encode at bench scale
-    (measured 1.6s for 2000x64 vs 0.9s for this full kernel with
-    normalization fused) — and is the corpus path :func:`pq_adc_topk`
-    uses."""
+    One narrow scan, numpy over Arrow batches (``mapInPandas``), zero
+    shuffles of the corpus: encode streams at scan speed and writes one
+    row per vector.  np.floor/multiply are the IEEE-754 double ops the
+    JVM and DuckDB execute, so codes are bit-equal to the
+    :func:`fxp_l2_sub` specification (pinned by test)."""
     import numpy as np
     import pandas as pd
 
-    cw = _cb_lists(cbw)
-    cb = np.array(cw, dtype=np.float64)  # (PQ_M, PQ_K, PQ_SUBDIM)
+    cb = np.array(_cb_lists(cbw), dtype=np.float64)  # (PQ_M, PQ_K, PQ_SUBDIM)
     out_schema = "vec_id bigint, " + ", ".join(f"c{m} int" for m in range(PQ_M))
-    in_col = "embedding" if normalize else "nv"
 
     def encode(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            v = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf[in_col]]
-            )  # (n, DIM)
-            if normalize:
-                q = (
-                    np.floor(v * v * float(FXP_SCALE) + 0.5)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                )
-                nrm = np.sqrt(q.astype(np.float64) / float(FXP_SCALE))
-                v = v / nrm[:, None]
-            codes = np.empty((n, PQ_M), dtype=np.int32)
-            kcode = np.arange(PQ_K, dtype=np.int64) + 1
-            # 256-row blocks (round 13): the full (n, K, SUBDIM) distance
-            # tensor spills L2 and its ~1 MB temporaries dominate the
-            # kernel — blocking the row axis keeps every intermediate
-            # cache-resident (measured 386 -> 70 ms at n=2000 driver-side,
-            # 1.6x warm).  Bit-equality unchanged: the per-element
-            # floor/multiply/subtract ops and the per-row int64 sums are
-            # identical regardless of block boundaries (pinned by
-            # test_pq_adc_kernels_agree_end_to_end and the oracle gate).
-            for m in range(PQ_M):
-                seg = v[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-                for s in range(0, n, 256):
-                    d = (
-                        seg[s : s + 256, None, :] - cb[m][None, :, :]
-                    )  # (<=256, K, SUBDIM)
-                    terms = np.floor(
-                        d * d * float(FXP_SCALE) + 0.5
-                    ).astype(np.int64)
-                    comp = terms.sum(axis=2) * 128 + kcode
-                    codes[s : s + 256, m] = (comp.min(axis=1) % 128).astype(
-                        np.int32
-                    )
+            v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["embedding"]])
+            codes = _encode_rows(_unit_rows(v), cb)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -986,230 +760,67 @@ def pq_encode_arrow(
                 }
             )
 
-    return nv.mapInPandas(encode, schema=out_schema)
+    return emb.select("vec_id", "embedding").mapInPandas(encode, schema=out_schema)
 
 
-def pq_train(nv: DataFrame, cbw: DataFrame | list) -> DataFrame:
-    """One per-subspace Lloyd refinement of the PQ codebook: assign every
-    sampled subvector to its nearest codeword, replace each codeword with
-    the exact fixed-point mean of its members (empty codewords keep their
-    init value, so codes stay DENSE 1..k and ADC tables stay indexable).
+def pq_train(emb: DataFrame, cbw: DataFrame | list) -> DataFrame:
+    """One per-subspace Lloyd refinement of the PQ codebook over RAW
+    embeddings: assign every sampled subvector to its nearest codeword,
+    replace each codeword with the exact fixed-point mean of its members
+    (empty codewords keep their init value, so codes stay DENSE 1..k and
+    ADC tables stay indexable).
 
-    ARCHITECTURE (the FAISS split): codebook training runs DRIVER-SIDE in
-    numpy over the collected training sample; only the corpus passes
-    (encode, ADC scoring) are distributed.  The sample is a deterministic
-    20% hash gate — a pushdown-friendly filter, no RNG — and is bounded
-    by the same contract that bounds every other driver collect here
-    (FAISS trains on ~10^4-10^5 vectors regardless of corpus size; at
-    production scale compose the gate with a hash-order LIMIT, mirrored
-    in the oracle, to cap it).  The previous all-DataFrame formulation
-    spent ~5s of pure job-scheduling overhead per round on
-    kilobyte-scale aggregations; numpy does the same exact integer
-    arithmetic in microseconds and the result is BIT-EQUAL:
-    ``floor(v*MEAN_SCALE+0.5)`` summed in int64, then
-    ``(sum/MEAN_SCALE)/count`` in IEEE doubles — the identical op
-    sequence the DuckDB oracle executes (queries/vector_queries.py
-    ``mu{m}`` CTEs).  Assignment uses the same composite
-    ``dist*128+code`` min as :func:`pq_encode`.
-
-    Sampled codewords land where single vectors happen to fall;
-    per-subspace means drop quantization error the way full k-means does
-    for IVF — tests pin the recall improvement.  Iterating = re-calling
-    this function."""
+    Training runs DRIVER-SIDE in numpy over a bounded sample (the FAISS
+    split: only the corpus passes — encode, ADC scoring — are
+    distributed).  The sample is a deterministic 20% hash gate capped by
+    a hash-order LIMIT of PQ_TRAIN_CAP rows, both mirrored in the DuckDB
+    oracle; it arrives over the Arrow channel (``toPandas``) and is
+    normalized and assigned with the corpus kernels (:func:`_unit_rows`,
+    :func:`_encode_rows`).  Means are ``floor(v*MEAN_SCALE+0.5)`` summed
+    in int64, then ``(sum/MEAN_SCALE)/count`` in IEEE doubles — the op
+    sequence of the oracle's ``mu{m}`` CTEs (queries/vector_queries.py).
+    Iterating = re-calling this function; tests pin the recall gain."""
     import numpy as np
 
-    from pyspark.sql import types as T
-
-    spark = nv.sparkSession
-    if isinstance(cbw, DataFrame):
-        cb_schema, cb_rows = cbw.schema, cbw.collect()
-    else:
-        # explicit schema (same StructType as pq_codebook builds) — a None
-        # schema would fall back to deprecated dict-based inference and
-        # type `code` as bigint instead of int
-        cb_schema = T.StructType(
-            [T.StructField("code", T.IntegerType(), False)]
-            + [
-                T.StructField(f"sw{m}", T.ArrayType(T.DoubleType()), False)
-                for m in range(PQ_M)
-            ]
-        )
-        cb_rows = list(cbw)
-    cb_rows.sort(key=lambda r: r["code"])
-    cb = np.array(
-        [[list(r[f"sw{m}"]) for r in cb_rows] for m in range(PQ_M)],
-        dtype=np.float64,
-    )  # (M, K, SUBDIM)
-    # 20% hash gate CAPPED by deterministic hash-order LIMIT (the FAISS
-    # contract: training saturates at ~10^4-10^5 points, so the collect is
-    # bounded at any corpus size). toPandas() rides the Arrow channel —
-    # list<double> columns arrive as numpy arrays with exact bits, where
-    # the Row-based collect() built millions of Python float objects
-    # (measured 70 s at a 51k-row sample).
-    #
-    # Input may be RAW (column ``embedding``) or pre-normalized (column
-    # ``nv``). Prefer raw: sampling the raw column keeps the 64-term
-    # fixed-point normalize expression out of the sample job entirely
-    # (measured ~2 s of py4j plan construction + ~2 s of codegen for a
-    # 435-row sample) and normalizes the BOUNDED sample driver-side with
-    # the identical numpy sequence :func:`pq_codebook` runs — exact int
-    # self-dot, one IEEE sqrt, one divide per element — so codewords are
-    # bit-equal either way (same contract the encode kernel's
-    # ``normalize=True`` path is pinned under).
-    # Bit-equality bound for the raw branch below (round-8 advisor note):
-    # the numpy path sums per-element FLOOR terms in int64, while
-    # norm_expr sums them as float64 and casts the total to BIGINT once.
-    # The two agree exactly while every partial sum stays below 2^53
-    # (where float64 addition is exact and order-free): terms are
-    # x_i^2 * FXP_SCALE, so the self-dot bound is |x|^2 * DIM * 1e12 <
-    # 2^53, i.e. per-element |x| <= ~11.8 at DIM=64.  The embeddings
-    # table stores O(1)-magnitude components (|x| < 2), three orders
-    # inside the bound — and no summation-order fix could extend it:
-    # beyond 2^53 numpy's pairwise float64 sum and the JVM's
-    # left-associated chain diverge from EACH OTHER, so int64 (exact,
-    # order-free) is the more defensible side to keep.
-    raw = "nv" not in nv.columns
-    col = "embedding" if raw else "nv"
+    cb = np.array(_cb_lists(cbw), dtype=np.float64)  # (M, K, SUBDIM)
     hk = hash48(F.col("vec_id").cast("string"))
     sample_pd = (
-        nv.where(hk % 5 < 1)
+        emb.where(hk % 5 < 1)
         .orderBy(hk, "vec_id")
         .limit(PQ_TRAIN_CAP)
-        .select(col)
+        .select("embedding")
         .toPandas()
     )
     new_cb = cb.copy()
     if len(sample_pd):
-        v = np.array([np.asarray(x, dtype=np.float64) for x in sample_pd[col]])
-        if raw:
-            sq = (
-                np.floor(v * v * float(FXP_SCALE) + 0.5)
-                .astype(np.int64)
-                .sum(axis=1)
-            )
-            norms = np.sqrt(sq.astype(np.float64) / float(FXP_SCALE))
-            v = v / norms[:, None]
-        n = len(v)
-        sub = v.reshape(n, PQ_M, 1, PQ_SUBDIM)
-        d = sub - cb[None, :, :, :]
-        terms = np.floor(d * d * float(FXP_SCALE) + 0.5).astype(np.int64)
-        comp = terms.sum(axis=3) * 128 + (np.arange(PQ_K, dtype=np.int64) + 1)
-        assign = (comp.min(axis=2) % 128) - 1  # (n, M) 0-based code index
+        v = _unit_rows(
+            np.array([np.asarray(x, dtype=np.float64) for x in sample_pd["embedding"]])
+        )
+        assign = _encode_rows(v, cb) - 1  # (n, M) 0-based code index
         vs = np.floor(v * float(MEAN_SCALE) + 0.5).astype(np.int64)  # (n, DIM)
         for m in range(PQ_M):
             seg = vs[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-            for c in range(PQ_K):
+            for c in range(cb.shape[1]):
                 mask = assign[:, m] == c
                 cnt = int(mask.sum())
                 if cnt:
                     s = seg[mask].sum(axis=0, dtype=np.int64)
                     new_cb[m, c] = s.astype(np.float64) / float(MEAN_SCALE) / cnt
-    out = [
-        {
-            "code": r["code"],
-            **{
-                f"sw{m}": [float(x) for x in new_cb[m, i]]
-                for m in range(PQ_M)
-            },
-        }
-        for i, r in enumerate(cb_rows)
-    ]
-    return local_relation_df(spark, out, cb_schema)
+    return local_relation_df(emb.sparkSession, _cb_out(new_cb), _cb_schema())
 
 
-def pq_adc_topk(
-    emb: DataFrame,
-    k: int = 5,
-    train: bool = True,
-    kernel: str = "arrow",
-    codebook: list | None = None,
-    q_rows: list | None = None,
-) -> DataFrame:
-    """PQ-ADC approximate top-k for the standard query set (vec_id < 3).
+def _pq_codebook_rows(emb: DataFrame, train: bool) -> list:
+    """The init codebook, optionally refined by one :func:`pq_train`
+    round, collected: PQ_K rows by construction.  As lazy plans their
+    corpus-scan subtrees would be re-executed by every consumer."""
+    cb_rows = pq_codebook(emb).collect()
+    return pq_train(emb, cb_rows).collect() if train else cb_rows
 
-    Plan: normalize once (unit-vector L2 ranks identically to cosine);
-    train the codebook (one Lloyd round per subspace); encode the corpus
-    (codes are WIDE-table small — PQ_M small ints per vector); per query,
-    precompute the PQ_M x PQ_K distance lookup tables (a broadcast of
-    queries x k rows); score every candidate with PQ_M ``element_at``
-    lookups + integer adds — zero float math per candidate, fully inside
-    codegen.  ``adc_dist`` is an exact int64 (deterministic
-    cross-engine).  At 100 TB the scored relation reads only the 8-code
-    table, not the embeddings — the I/O win PQ exists for; pair with IVF
-    coarse clustering (ivf_assign) to also shrink the candidate set, and
-    exact-rerank the ADC shortlist where final ordering matters.
 
-    ``kernel`` picks the corpus-encode implementation — both pinned
-    BIT-EQUAL by tests/test_llm_ops.py and re-measured this round with
-    FORCED evaluation (a bare ``count()`` over the SQL kernel lets
-    Catalyst prune the encode expressions away entirely — an earlier
-    comparison fell into exactly that trap): "arrow" (default,
-    :func:`pq_encode_arrow`) wins at the benched corpus scale (1.9s vs
-    4.2s warm at 2k vectors — the SQL kernel's transform() lambdas are
-    interpreted per row, ~8M floor ops here); "sql" (:func:`pq_encode`)
-    wins once the corpus amortizes the ~2s Python-worker/Arrow constant
-    AND memory bandwidth saturates the numpy side (11s vs 17s at 128k
-    vectors, 32 concurrent tasks).  Neither is orders-of-magnitude:
-    both execute the same ~4k fixed-point ops/vector, interpreted
-    JVM-side or vectorized-but-memory-bound Python-side.  Pick per
-    deployment; the narrow one-scan plan shape is identical."""
-    # codebooks are PQ_K rows by construction (bounded, corpus-size-
-    # independent): collected ONCE here (two tiny jobs — init sample +
-    # one Lloyd round) and re-shipped as the 1-row broadcast _cb array.
-    # As lazy plans their corpus-scan subtrees would be RE-EXECUTED by
-    # every consumer (measured 108 parquet scans / 23k plan nodes in the
-    # unmaterialized pq_search plan); binary py4j doubles keep every
-    # codeword bit-identical.  ``codebook`` short-circuits training with
-    # already-trained rows (the deployed shape: the index is built once
-    # and amortizes across every query against the same corpus — see
-    # queries/vector_queries.py's per-corpus memo), making this function
-    # fully lazy: zero eager jobs, one action end-to-end.
-    nv = _normalized(emb)
-    if codebook is not None:
-        cb_rows = list(codebook)
-    else:
-        cb_rows = pq_codebook(emb).collect()
-        if train:
-            # raw input: pq_train normalizes its bounded sample
-            # driver-side (bit-equal), keeping the 64-term normalize
-            # expression out of the training job
-            cb_rows = pq_train(emb, cb_rows).collect()
-    cw = _cb_lists(cb_rows)
-    if kernel == "arrow":
-        # raw-embedding input, normalization fused into the numpy kernel
-        # (bit-equal, pinned) — skips the interpreted transform() lambda
-        codes = pq_encode_arrow(
-            emb.select("vec_id", "embedding"), cb_rows, normalize=True
-        )
-    else:
-        codes = pq_encode(nv, cb_rows)
-    # Round-13: the per-query ADC tables are computed DRIVER-SIDE (guide
-    # §1.2 — the distributed form was two serial BroadcastNestedLoopJoin
-    # stages whose only input is queries x codebook, both bounded by
-    # construction: the query set is a handful of rows, the codebook
-    # PQ_M x PQ_K codewords).  One tiny pushdown-filtered collect of the
-    # raw query vectors + the SAME numpy op sequence the pinned Arrow
-    # encode kernel uses (np.floor/multiply are the identical IEEE-754
-    # double ops the JVM executes) yields LUTs whose entries are pure
-    # int64 — nothing float ever re-crosses py4j, so the literal luts
-    # relation is bit-identical to the old in-plan projection (pinned in
-    # tests/test_llm_ops.py against the Column-form specification).
-    # ``q_rows`` lets a composing caller (pq_search) collect the bounded
-    # query set ONCE and reuse it for both the LUTs and its own rerank
-    # side (round 14 — one fewer scan + broadcast-build job per run).
-    if q_rows is None:
-        q_rows = (
-            emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
-        )
-    luts = local_relation_df(
-        emb.sparkSession,
-        _luts_driver(q_rows, cw),
-        "query_id bigint, "
-        + ", ".join(f"l{m} array<bigint>" for m in range(PQ_M)),
-    )
-    scored = codes.crossJoin(F.broadcast(luts)).where(
-        F.col("vec_id") != F.col("query_id")
-    )
+def _adc_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Score (query, candidate) rows carrying ``l{m}`` tables and ``c{m}``
+    codes with PQ_M lookups + integer adds, keep each query's ``k``
+    smallest ``adc_dist`` (ties to the smaller vec_id)."""
     dist = None
     for m in range(PQ_M):
         t = F.element_at(F.col(f"l{m}"), F.col(f"c{m}"))
@@ -1222,12 +833,53 @@ def pq_adc_topk(
     )
 
 
+def _query_rows(emb: DataFrame) -> list:
+    """The standard query set (vec_id < 3), collected: a bounded,
+    pushdown-filtered read of the raw query vectors."""
+    return emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
+
+
+def pq_adc_topk(
+    emb: DataFrame,
+    k: int = 5,
+    train: bool = True,
+    codebook: list | None = None,
+    q_rows: list | None = None,
+) -> DataFrame:
+    """PQ-ADC approximate top-k for the standard query set (vec_id < 3).
+
+    Plan: train the codebook (one Lloyd round per subspace); encode the
+    corpus (PQ_M small ints per vector); per query, the PQ_M x PQ_K
+    distance lookup tables, built driver-side and broadcast as a literal
+    relation; score every candidate with PQ_M ``element_at`` lookups +
+    integer adds — zero float math per candidate, fully inside codegen.
+    ``adc_dist`` is an exact int64 (deterministic cross-engine).  At
+    100 TB the scored relation reads only the 8-code table, not the
+    embeddings — the I/O win PQ exists for; pair with IVF coarse
+    clustering (ivf_pq_topk) to also shrink the candidate set, and
+    exact-rerank the ADC shortlist where final ordering matters.
+
+    ``codebook`` short-circuits training with already-trained rows (the
+    deployed shape: the index is built once and amortizes across every
+    query — see queries/vector_queries.py's per-corpus memo); ``q_rows``
+    lets a composing caller (:func:`pq_search`) share one collect of the
+    query set."""
+    cb_rows = list(codebook) if codebook is not None else _pq_codebook_rows(emb, train)
+    if q_rows is None:
+        q_rows = _query_rows(emb)
+    codes = pq_encode(emb, cb_rows)
+    luts = _luts(emb.sparkSession, q_rows, _cb_lists(cb_rows))
+    scored = codes.crossJoin(F.broadcast(luts)).where(
+        F.col("vec_id") != F.col("query_id")
+    )
+    return _adc_topk(scored, k)
+
+
 def pq_search(
     emb: DataFrame,
     k: int = 5,
     shortlist: int = 50,
     train: bool = True,
-    kernel: str = "arrow",
     codebook: list | None = None,
 ) -> DataFrame:
     """Production PQ search shape: ADC shortlist (integer lookups over the
@@ -1238,21 +890,12 @@ def pq_search(
     (queries x shortlist)-row join back to the embedding table.  Recall =
     P(true top-k inside the ADC shortlist); tests pin the trained-codebook
     recall floor and the improvement over the untrained sample."""
-    # Collect the bounded query set ONCE (3 rows by construction) and
-    # share it between the ADC LUTs and the rerank's query side (round
-    # 14, guide §1.2/§4): the rerank used to re-scan the embedding table
-    # for the same 3 rows inside a broadcast build — one whole extra
-    # parquet scan + serial broadcast-build job per evaluation.  As a
-    # LocalRelation the broadcast builds driver-side with zero tasks.
-    # Bit-exactness: array<float> values round-trip exactly through
-    # float64 (collect) and back to float32 (Arrow), and _qnrm is
-    # computed in-plan over those identical values.
-    q_rows = (
-        emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
-    )
+    # one collect of the bounded query set feeds both the ADC tables and
+    # the rerank's query side (a LocalRelation: its broadcast builds
+    # driver-side, no second scan); array<float> values round-trip exactly
+    q_rows = _query_rows(emb)
     sl = pq_adc_topk(
-        emb, k=shortlist, train=train, kernel=kernel, codebook=codebook,
-        q_rows=q_rows,
+        emb, k=shortlist, train=train, codebook=codebook, q_rows=q_rows
     ).select("query_id", "vec_id")
     base = emb.select("vec_id", "embedding").withColumn(
         "_nrm", norm_expr("embedding")
@@ -1262,14 +905,9 @@ def pq_search(
         [(r["vec_id"], r["embedding"]) for r in q_rows],
         "query_id bigint, qv array<float>",
     ).withColumn("_qnrm", norm_expr("qv"))
-    # broadcast the SHORTLIST, not the base table (round 13, guide §3.1):
-    # sl is bounded at queries x shortlist rows by construction, while
-    # base is the corpus — but sl's size estimate is garbage (it hangs
-    # off a window over a broadcast-nested-loop join), so left to itself
-    # Catalyst picks the base side whenever the corpus LOOKS small and
-    # would shuffle-join (or worse, broadcast the corpus) at scale.  The
-    # hint makes the rerank probe a broadcast-hash join against the
-    # embedding scan at every corpus size.
+    # broadcast the SHORTLIST (bounded at queries x shortlist rows), not
+    # the corpus: sl's size estimate is unusable (a window over a nested-
+    # loop join), so without the hint Catalyst may pick the base side
     j = F.broadcast(sl).join(base, "vec_id").join(F.broadcast(q), "query_id")
     sim = (fxp_dot_expr("embedding", "qv").cast("double") / FXP_SCALE) / (
         F.col("_nrm") * F.col("_qnrm")
@@ -1282,9 +920,7 @@ def pq_search(
     )
 
 
-def ivf_pq_topk(
-    emb: DataFrame, k: int = 5, train: bool = True, kernel: str = "arrow"
-) -> DataFrame:
+def ivf_pq_topk(emb: DataFrame, k: int = 5, train: bool = True) -> DataFrame:
     """IVF-PQ (the FAISS IVFPQ architecture, Jegou TPAMI'11 §V): coarse
     IVF clustering bounds WHICH candidates are scored (the query's
     assigned cluster only, nprobe=1), product quantization bounds WHAT is
@@ -1293,7 +929,8 @@ def ivf_pq_topk(
     code table — candidates O(n/K), bytes O(8) each, zero float ops.
 
     Plan: broadcast coarse codebook -> one corpus assignment pass;
-    trained PQ codebook -> one corpus encode pass; the scored relation is
+    trained PQ codebook -> one corpus encode pass; the ADC tables are
+    built driver-side as in :func:`pq_adc_topk`; the scored relation is
     an equi-join on the cluster id (hash shuffle of 8-code rows), never a
     cross join.  Exact-rerank the survivors where final ordering matters
     (compose with the pq_search rerank shape)."""
@@ -1302,27 +939,9 @@ def ivf_pq_topk(
     cents = local_relation_df(spark, _c.collect(), _c.schema)
     clusters = assign_to_centroids(emb, cents).select("vec_id", "cluster")
 
-    nv = _normalized(emb)
-    cb_rows = pq_codebook(emb).collect()
-    if train:
-        # raw input: sample normalized driver-side (bit-equal)
-        cb_rows = pq_train(emb, cb_rows).collect()
-    cw = _cb_lists(cb_rows)
-    cbdf = _cb_onerow(emb.sparkSession, cw)
-    if kernel == "arrow":
-        codes = pq_encode_arrow(
-            emb.select("vec_id", "embedding"), cb_rows, normalize=True
-        ).join(clusters, "vec_id")
-    else:
-        codes = pq_encode(nv, cb_rows).join(clusters, "vec_id")
-
-    q = nv.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")
-    )
-    luts = q.crossJoin(F.broadcast(cbdf)).select(
-        "query_id",
-        *[F.expr(_lut_sql(m, "qv")).alias(f"l{m}") for m in range(PQ_M)],
-    )
+    cb_rows = _pq_codebook_rows(emb, train)
+    codes = pq_encode(emb, cb_rows).join(clusters, "vec_id")
+    luts = _luts(spark, _query_rows(emb), _cb_lists(cb_rows))
     qprobe = luts.join(
         clusters.where(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"), F.col("cluster").alias("qcluster")
@@ -1334,16 +953,7 @@ def ivf_pq_topk(
         (F.col("cluster") == F.col("qcluster"))
         & (F.col("vec_id") != F.col("query_id")),
     )
-    dist = None
-    for m in range(PQ_M):
-        t = F.element_at(F.col(f"l{m}"), F.col(f"c{m}"))
-        dist = t if dist is None else dist + t
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist"), "vec_id")
-    return (
-        j.select("query_id", "vec_id", dist.alias("adc_dist"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-    )
+    return _adc_topk(j, k)
 
 
 def cluster_silhouette(emb: DataFrame, k: int = IVF_K) -> DataFrame:

@@ -13,12 +13,12 @@ from findb_spark.ops.vector import (
     N_PLANES,
     PROJ_SCALE,
     ann_lsh_topk,
-    cosine,
     cosine_sql,
     cosine_topk,
-    fxp_dot,
+    fxp_dot_expr,
     fxp_dot_sql,
     near_dup_pairs,
+    norm_expr,
     plane_matrix,
 )
 from findb_spark.registry import register
@@ -328,8 +328,7 @@ FROM n GROUP BY label
 )
 def vec_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    nrm = F.sqrt(fxp_dot(F.col("embedding"), F.col("embedding")).cast("double") / FXP_SCALE)
-    n = emb.select("label", nrm.alias("nrm"))
+    n = emb.select("label", norm_expr("embedding").alias("nrm"))
     return n.groupBy("label").agg(
         F.count("*").alias("n_vecs"),
         (
@@ -807,28 +806,13 @@ def vec_truncated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     result bit-identical cross-engine."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = _queryset(spark, sf_dir)
-    corpus = emb.withColumn(
-        "_nrm",
-        F.sqrt(
-            fxp_dot(F.col("embedding"), F.col("embedding"), dim=_TRUNC_DIM).cast(
-                "double"
-            )
-            / FXP_SCALE
-        ),
-    )
-    qn = q.withColumn(
-        "_qnrm",
-        F.sqrt(
-            fxp_dot(F.col("qv"), F.col("qv"), dim=_TRUNC_DIM).cast("double")
-            / FXP_SCALE
-        ),
-    )
+    corpus = emb.withColumn("_nrm", norm_expr("embedding", dim=_TRUNC_DIM))
+    qn = q.withColumn("_qnrm", norm_expr("qv", dim=_TRUNC_DIM))
     j = corpus.crossJoin(F.broadcast(qn)).where(
         F.col("vec_id") != F.col("query_id")
     )
     sim = (
-        fxp_dot(F.col("embedding"), F.col("qv"), dim=_TRUNC_DIM).cast("double")
-        / FXP_SCALE
+        fxp_dot_expr("embedding", "qv", dim=_TRUNC_DIM).cast("double") / FXP_SCALE
     ) / (F.col("_nrm") * F.col("_qnrm"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
     return (

@@ -300,6 +300,20 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _has_nan(v) -> bool:
+    """True when ``v`` is a float NaN or holds one at any nesting depth
+    (lists, tuples/Rows, dicts, numpy arrays)."""
+    if hasattr(v, "tolist"):  # numpy array or scalar
+        v = v.tolist()
+    if isinstance(v, float):
+        return v != v
+    if isinstance(v, dict):
+        v = v.values()
+    elif not isinstance(v, (list, tuple)):
+        return False
+    return any(_has_nan(x) for x in v)
+
+
 def local_relation_df(spark: SparkSession, rows, schema):
     """A SMALL driver-built relation as a true LocalRelation
     (``LocalTableScan`` in the plan) instead of a Python-RDD-backed plan.
@@ -326,16 +340,11 @@ def local_relation_df(spark: SparkSession, rows, schema):
     ``schema``: StructType or DDL string.  Oversized payloads degrade to
     an Arrow-batch-backed JVM RDD (still no Python at evaluation).
 
-    BIT-EQUALITY CAVEATS (round-14 advisor): the pandas/Arrow channel is
-    bit-identical to ``createDataFrame(list)`` only for FINITE numerics
-    and None-free numeric columns.  A float ``NaN`` becomes SQL NULL
-    (pyarrow ``from_pandas`` treats NaN as missing), and ``None`` in an
-    int column coerces the pandas column to float64 before conversion —
-    both silently change values vs the py4j path.  No current call site
-    passes NaN or a None-holding numeric column (codebooks, LUTs,
-    centroids, paths, prices are all constructed finite and non-null);
-    a NEW call site that might must pre-clean or keep
-    ``createDataFrame(list)``."""
+    The Arrow channel would silently change two kinds of value that
+    ``createDataFrame(list)`` keeps: a float NaN becomes SQL NULL, and
+    ``None`` in an integer column turns the pandas column into float64
+    (large int64 values lose precision).  Both raise ``ValueError``
+    instead; NULL in a non-integer column is fine."""
     import pandas as pd
 
     from pyspark.sql import types as T
@@ -349,6 +358,17 @@ def local_relation_df(spark: SparkSession, rows, schema):
         n: [r[n] if isinstance(r, dict) else r[i] for r in rows]
         for i, n in enumerate(names)
     }
+    for f in schema.fields:
+        vals = data[f.name]
+        if isinstance(f.dataType, T.IntegralType) and any(v is None for v in vals):
+            raise ValueError(
+                f"local_relation_df: None in integer column {f.name!r} "
+                "would be widened to float64"
+            )
+        if any(_has_nan(v) for v in vals):
+            raise ValueError(
+                f"local_relation_df: NaN in column {f.name!r} would become NULL"
+            )
     return spark.createDataFrame(pd.DataFrame(data, columns=names), schema=schema)
 
 

@@ -214,19 +214,6 @@ def view_click_join_stream(
     ).select("user_id", "view_id", "click_id", "view_ts", "click_ts")
 
 
-def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete") -> None:
-    """Replay all available input into an in-memory sink (test/verification
-    harness; production sinks are parquet/kafka via writeStream)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_to_parquet(
     stream_df: DataFrame, path: str, checkpoint: str, mode: str = "append"
 ) -> None:

@@ -1,25 +1,29 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for every bench-flagged query into
-plans/$PLANS_ROUND/<query>_<tag>.txt (per-round optimization evidence;
-PLANS_ROUND defaults to r14).
+plans/<round>/<query>_<tag>.txt (per-round optimization evidence).
 
-Usage: [PLANS_ROUND=rNN] python scripts/capture_plans.py <tag> [sf_dir] [query ...]
+Usage: python scripts/capture_plans.py <round> <tag> <sf_dir> [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
-def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    only = set(sys.argv[3:])
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("round", help="output sub-directory of plans/, e.g. r15")
+    ap.add_argument("tag", help="file-name suffix, e.g. before / after")
+    ap.add_argument("sf_dir", help="testdata scale-factor directory")
+    ap.add_argument("query", nargs="*", help="only these bench queries")
+    args = ap.parse_args(argv)
 
     from findb_spark.registry import registration_order_specs
     from findb_spark.session import get_spark
@@ -27,24 +31,22 @@ def main() -> int:
     spark = get_spark(app_name="capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    out_dir = os.path.join(
-        "/root/repo/plans", os.environ.get("PLANS_ROUND", "r14")
-    )
+    out_dir = os.path.join(REPO, "plans", args.round)
     os.makedirs(out_dir, exist_ok=True)
 
     specs = [s for s in registration_order_specs().values() if s.bench]
-    if only:
-        specs = [s for s in specs if s.name in only]
+    if args.query:
+        specs = [s for s in specs if s.name in set(args.query)]
     for spec in specs:
         try:
-            df = spec.fn(spark, sf_dir)
+            df = spec.fn(spark, args.sf_dir)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
             text = buf.getvalue()
         except Exception as e:  # noqa: BLE001
             text = f"ERROR building {spec.name}: {e}\n"
-        path = os.path.join(out_dir, f"{spec.name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{spec.name}_{args.tag}.txt")
         with open(path, "w") as fh:
             fh.write(text)
         n_ex = text.count("Exchange")

@@ -80,6 +80,15 @@ def stage_quantiles(spark, exclude: set) -> dict:
     }
 
 
+def hot_stride(n: int, hot_n: int) -> int:
+    """vec_id stride that marks ~``hot_n`` of ``n`` rows hot; rejects a
+    ``hot_n`` outside ``0 < hot_n <= n`` (the stride would be 0 and the
+    Spark ``%`` would divide by it)."""
+    if not 0 < hot_n <= n:
+        raise ValueError(f"hot_n must satisfy 0 < hot_n <= n ({n}), got {hot_n}")
+    return n // hot_n
+
+
 def main() -> int:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 32
     hot_n = int(sys.argv[2]) if len(sys.argv) > 2 else 4096
@@ -99,6 +108,7 @@ def main() -> int:
     replicate_embeddings(spark, factor)
     balanced = spark.read.parquet(f"{WORK}/embeddings.parquet")
     n = balanced.count()
+    stride = hot_stride(n, hot_n)
     n_cent = max(64, n // TARGET_CLUSTER)
 
     # hot corpus: first hot_n vec_ids become one tight semantic cluster
@@ -113,7 +123,7 @@ def main() -> int:
     hot = balanced.select(
         "vec_id",
         F.when(
-            F.col("vec_id") % F.lit(n // hot_n) == 0,
+            F.col("vec_id") % F.lit(stride) == 0,
             F.zip_with(base, jit, lambda a, b: (a + b).cast("float")),
         )
         .otherwise(F.col("embedding"))
@@ -124,7 +134,7 @@ def main() -> int:
     hot.write.mode("overwrite").parquet(hot_path)
     hot = spark.read.parquet(hot_path)
 
-    out: dict = {"factor": factor, "n_vectors": n, "hot_n": n // (n // hot_n),
+    out: dict = {"factor": factor, "n_vectors": n, "hot_n": n // stride,
                  "n_cent": n_cent}
     for tag, emb in (("balanced", balanced), ("hot", hot)):
         spark.catalog.clearCache()

@@ -211,7 +211,7 @@ def test_kmeans_lloyd_improves_mean_cosine(spark, sf_dir):
 
     from findb_spark.ops.vector import (
         assign_to_centroids,
-        cosine,
+        cosine_expr,
         ivf_centroids,
         kmeans_refine_centroids,
     )
@@ -224,7 +224,7 @@ def test_kmeans_lloyd_improves_mean_cosine(spark, sf_dir):
     try:
         def mean_cos(asg, cents):
             j = asg.join(cents, asg.cluster == cents.cent_id).select(
-                cosine(F.col("embedding"), F.col("cvec")).alias("c")
+                cosine_expr("embedding", "cvec").alias("c")
             )
             return j.agg(F.avg("c")).collect()[0][0]
 
@@ -263,7 +263,6 @@ def test_pq_codes_dense_and_complete(spark, sf_dir):
     from findb_spark.ops.vector import (
         PQ_K,
         PQ_M,
-        _normalized,
         pq_codebook,
         pq_encode,
         pq_train,
@@ -271,10 +270,9 @@ def test_pq_codes_dense_and_complete(spark, sf_dir):
     from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    nv = _normalized(emb)
-    cbw = pq_train(nv, pq_codebook(emb))
+    cbw = pq_train(emb, pq_codebook(emb))
     assert cbw.count() == PQ_K
-    codes = pq_encode(nv, cbw)
+    codes = pq_encode(emb, cbw)
     assert codes.count() == emb.count()
     bounds = codes.agg(
         *[F.min(f"c{m}").alias(f"lo{m}") for m in range(PQ_M)],
@@ -374,50 +372,44 @@ def test_chunk_dup_stats_tail_and_exact_dup_edges(spark):
     assert got[3] == (2, 0, 0.0)
 
 
-def test_pq_train_raw_and_normalized_inputs_bit_equal(spark, sf_dir):
-    """pq_train accepts RAW embeddings (sample normalized driver-side in
-    numpy — exact int self-dot, one IEEE sqrt, one divide per element) or
-    a pre-normalized ``nv`` DataFrame (the JVM fixed-point normalize).
-    Both must yield the BIT-identical codebook: the numpy sequence is the
-    same one pq_codebook runs and the encode kernel's normalize=True path
-    is pinned under — any divergence is a normalization-contract bug."""
-    from findb_spark.ops.vector import _normalized, pq_codebook, pq_train
-    from findb_spark.session import load_table
+def _jvm_normalized(emb):
+    """(vec_id, nv): the corpus unit-normalized JVM-side with the
+    fixed-point norm — the input the fxp_l2_sub specification reads."""
+    from pyspark.sql import functions as F
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb0 = pq_codebook(emb).collect()
-    via_nv = pq_train(_normalized(emb), cb0).collect()
-    via_raw = pq_train(emb, cb0).collect()
-    assert [r.asDict() for r in via_nv] == [r.asDict() for r in via_raw]
+    from findb_spark.ops.vector import norm_expr
+
+    return emb.select(
+        "vec_id", norm_expr("embedding").alias("_n"), "embedding"
+    ).select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double") / F.col("_n")).alias("nv"),
+    )
 
 
 def test_pq_encode_kernels_bit_equal(spark, sf_dir):
-    """The three PQ encode formulations must agree BIT-FOR-BIT: the
-    fxp_l2_sub Column form (the executable spec — crossJoin against the
-    broadcast codebook + composite min aggregate), the literal-codebook
-    SQL kernel (pq_encode, the narrow zero-shuffle default), and the
-    numpy-over-Arrow kernel (pq_encode_arrow, the high-throughput path).
-    Same IEEE-754 double ops + exact int64 sums on all three, so any
-    divergence is a kernel bug, not noise."""
+    """The PQ encode kernel (pq_encode: numpy over Arrow batches, RAW
+    embeddings normalized in-kernel) must agree BIT-FOR-BIT with the
+    fxp_l2_sub Column specification — a crossJoin of the JVM-normalized
+    corpus against the broadcast codebook + composite ``dist*128 + code``
+    min aggregate.  Same IEEE-754 double ops + exact int64 sums on both,
+    so any divergence is a kernel bug, not noise."""
     from pyspark.sql import functions as F
 
     from findb_spark.ops.vector import (
         PQ_M,
-        _normalized,
         fxp_l2_sub,
         pq_codebook,
         pq_encode,
-        pq_encode_arrow,
         pq_train,
     )
     from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    nv = _normalized(emb)
-    cbw = pq_train(nv, pq_codebook(emb))
+    cbw = pq_train(emb, pq_codebook(emb))
     cb_rows = cbw.collect()
 
-    j = nv.crossJoin(F.broadcast(cbw))
+    j = _jvm_normalized(emb).crossJoin(F.broadcast(cbw))
     dists = j.select(
         "vec_id",
         *[
@@ -434,81 +426,64 @@ def test_pq_encode_kernels_bit_equal(spark, sf_dir):
         r["vec_id"]: tuple(r[f"d{m}"] % 128 for m in range(PQ_M))
         for r in agg.collect()
     }
-    sql_k = {
+    got = {
         r["vec_id"]: tuple(r[f"c{m}"] for m in range(PQ_M))
-        for r in pq_encode(nv, cb_rows).collect()
+        for r in pq_encode(emb, cb_rows).collect()
     }
-    arrow_k = {
-        r["vec_id"]: tuple(r[f"c{m}"] for m in range(PQ_M))
-        for r in pq_encode_arrow(nv, cb_rows).collect()
-    }
-    # the fused-normalization variant takes RAW embeddings and must land
-    # on the same codes: its in-kernel numpy norm is the identical fxp
-    # op sequence as the Column-form normalization
-    arrow_fused = {
-        r["vec_id"]: tuple(r[f"c{m}"] for m in range(PQ_M))
-        for r in pq_encode_arrow(
-            emb.select("vec_id", "embedding"), cb_rows, normalize=True
-        ).collect()
-    }
-    assert spec == sql_k
-    assert spec == arrow_k
-    assert spec == arrow_fused
+    assert len(spec) == emb.count()
+    assert got == spec
 
 
-def test_string_built_fxp_kernels_bit_equal_to_dsl(spark, sf_dir):
+def test_string_built_fxp_kernels_bit_equal_to_numpy_reference(spark, sf_dir):
     """fxp_dot_expr / norm_expr / cosine_expr (server-side-parsed string
-    forms, one py4j call) must be BIT-EQUAL to the Column-DSL spec forms
-    on real embeddings — same Floor/Multiply/Add tree, only the
-    construction path differs."""
+    forms) must be BIT-EQUAL to a numpy fixed-point reference on real
+    embeddings, at full and truncated dimension: per element
+    ``floor(x*y*1e12 + 0.5)`` summed in int64, then the IEEE
+    divide/sqrt sequence — the op order of the driver-side ADC kernel."""
+    import math
+
+    import numpy as np
     from pyspark.sql import functions as F
 
     from findb_spark.ops.vector import (
         FXP_SCALE,
-        cosine,
         cosine_expr,
-        fxp_dot,
         fxp_dot_expr,
-        norm,
         norm_expr,
     )
     from findb_spark.session import load_table
+
+    scale = float(FXP_SCALE)
+
+    def dot(a, b):
+        return int(np.floor(a * b * scale + 0.5).astype(np.int64).sum())
+
+    def nrm(a):
+        return math.sqrt(float(dot(a, a)) / scale)
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    j = emb.crossJoin(F.broadcast(q))
-    rows = j.select(
-        "vec_id",
-        "qid",
-        (fxp_dot(F.col("embedding"), F.col("qv")) - fxp_dot_expr("embedding", "qv")).alias("d_dot"),
-        (norm(F.col("embedding")) - norm_expr("embedding")).alias("d_norm"),
-        (
-            cosine(F.col("embedding"), F.col("qv"))
-            - cosine_expr("embedding", "qv")
-        ).alias("d_cos"),
-    ).agg(
-        F.max(F.abs("d_dot")).alias("dot"),
-        F.max(F.abs("d_norm")).alias("nrm"),
-        F.max(F.abs("d_cos")).alias("cos"),
-    ).first()
-    assert rows.dot == 0
-    assert rows.nrm == 0.0
-    assert rows.cos == 0.0
-
-
-def test_pq_adc_kernels_agree_end_to_end(spark, sf_dir):
-    """The full ADC top-k must be IDENTICAL under both corpus-encode
-    kernels (kernel='arrow' default vs kernel='sql') — same codes, same
-    integer ADC distances, same ranking."""
-    from findb_spark.ops.vector import pq_adc_topk
-    from findb_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = sorted(map(tuple, pq_adc_topk(emb, k=20, kernel="arrow").collect()))
-    s = sorted(map(tuple, pq_adc_topk(emb, k=20, kernel="sql").collect()))
-    assert a == s
+    for dim in (64, 16):
+        rows = (
+            emb.crossJoin(F.broadcast(q))
+            .select(
+                "embedding",
+                "qv",
+                fxp_dot_expr("embedding", "qv", dim).alias("dot"),
+                norm_expr("embedding", dim).alias("nrm"),
+                cosine_expr("embedding", "qv", dim).alias("cos"),
+            )
+            .collect()
+        )
+        assert len(rows) > 0
+        for r in rows:
+            a = np.asarray(r["embedding"][:dim], dtype=np.float64)
+            b = np.asarray(r["qv"][:dim], dtype=np.float64)
+            assert r["dot"] == dot(a, b)
+            assert r["nrm"] == nrm(a)
+            assert r["cos"] == (float(dot(a, b)) / scale) / (nrm(a) * nrm(b))
 
 
 def test_local_relation_df(spark):
@@ -544,53 +519,72 @@ def test_local_relation_df(spark):
     assert sorted(map(tuple, d2.collect())) == [(1, [-2.5]), (2, [1.5])]
     # empty degrades to a plain empty relation
     assert local_relation_df(spark, [], "x bigint").count() == 0
+    # values the Arrow channel would silently change are rejected: NaN
+    # (-> NULL) at any nesting depth, None in an integer column (-> float64)
+    nan = float("nan")
+    for bad_rows, ddl in [
+        ([(1, nan)], "id bigint, x double"),
+        ([(1, [0.5, nan])], "id bigint, v array<double>"),
+        ([(1, [[0.5], [nan]])], "id bigint, v array<array<double>>"),
+        ([{"id": 1, "v": [nan]}], "id bigint, v array<double>"),
+        ([(2**60 + 1,), (None,)], "id bigint"),
+    ]:
+        with pytest.raises(ValueError):
+            local_relation_df(spark, bad_rows, ddl)
+    # NULL outside integer columns crosses unchanged
+    ok = local_relation_df(spark, [(1, None), (2, 0.5)], "id bigint, x double")
+    assert sorted(map(tuple, ok.collect())) == [(1, None), (2, 0.5)]
 
 
 def test_pq_luts_driver_matches_column_form(spark, sf_dir):
     """The driver-side ADC-table kernel (_luts_driver — what pq_adc_topk
-    ships as a literal broadcast relation since round 13) must be
-    BIT-IDENTICAL to the Column-form specification it replaced:
-    JVM-normalized queries crossJoined with the one-row _cb codebook and
-    projected through _lut_sql (integer entries, so equality is exact)."""
+    and ivf_pq_topk ship as a literal broadcast relation) must be
+    BIT-IDENTICAL to the fxp_l2_sub Column specification over a cross
+    join of the JVM-normalized queries with the wide ``sw{m}`` codebook
+    (integer entries, so equality is exact)."""
     from pyspark.sql import functions as F
 
     from findb_spark.ops.vector import (
+        PQ_K,
         PQ_M,
         _cb_lists,
-        _cb_onerow,
-        _lut_sql,
         _luts_driver,
-        _normalized,
+        fxp_l2_sub,
         pq_codebook,
         pq_train,
     )
     from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cw = _cb_lists(pq_train(emb, pq_codebook(emb).collect()).collect())
+    cbw = pq_train(emb, pq_codebook(emb).collect())
     q_rows = (
         emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
     )
-    got = sorted(_luts_driver(q_rows, cw))
-    q = _normalized(emb).where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")
-    )
+    got = sorted(_luts_driver(q_rows, _cb_lists(cbw)))
     spec_rows = (
-        q.crossJoin(F.broadcast(_cb_onerow(spark, cw)))
+        _jvm_normalized(emb)
+        .where(F.col("vec_id") < 3)
+        .crossJoin(F.broadcast(cbw))
         .select(
-            "query_id",
-            *[F.expr(_lut_sql(m, "qv")).alias(f"l{m}") for m in range(PQ_M)],
+            "vec_id",
+            "code",
+            *[
+                fxp_l2_sub(F.col("nv"), F.col(f"sw{m}"), m).alias(f"d{m}")
+                for m in range(PQ_M)
+            ],
         )
         .collect()
     )
-    spec = sorted(
-        (
-            int(r["query_id"]),
-            *[[int(x) for x in r[f"l{m}"]] for m in range(PQ_M)],
+    by_q: dict = {}
+    for r in sorted(spec_rows, key=lambda r: (r["vec_id"], r["code"])):
+        by_q.setdefault(int(r["vec_id"]), []).append(
+            [int(r[f"d{m}"]) for m in range(PQ_M)]
         )
-        for r in spec_rows
+    spec = sorted(
+        (qid, *[[d[m] for d in ds] for m in range(PQ_M)]) for qid, ds in by_q.items()
     )
     assert len(got) == 3
+    assert all(len(ds) == PQ_K for ds in by_q.values())
     assert got == spec
 
 

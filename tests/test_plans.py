@@ -350,8 +350,7 @@ def test_pq_corpus_pass_has_no_interpreted_normalization(spark):
     """The fused Arrow encode contract: the corpus pass is ONE
     MapInPandas stage fed raw embeddings — the interpreted JVM
     ``transform()`` normalization lambda (measured costlier than the
-    whole encode) must not appear upstream of it.  The query/LUT side
-    (3 rows) may still normalize JVM-side."""
+    whole encode) must not appear upstream of it."""
     import re
 
     p = _plan(spark, "vec_pq_adc")
